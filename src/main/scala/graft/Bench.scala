@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds. */
 object Bench {
@@ -158,32 +156,7 @@ object Bench {
     })
     sampler.setDaemon(true)
     sampler.start()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the library's documented deployment shape: native functions,
-      // the TopKPerGroup strategy, and the opt-in TopKRewrite rule
-      // ride the session extensions (GraftSession sets the same)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // scan-split sizing: the test lake is a few single-file tables, so
-      // 4 MiB splits keep all cores busy; at production scale (128 MiB+
-      // files, thousands of them) the default 128 MiB is right — this is
-      // a local-corpus override, not a cluster recommendation.
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // 194 distinct queries compile far more codegen units than the
-      // 100-entry default generated-class cache holds, so interleaved
-      // trials Janino-recompiled every stage of every query — pure
-      // driver latency for any multi-query workload, local or cluster
-      // (same conf as GraftSession; static, so set before the context).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup outside the timed loop
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()

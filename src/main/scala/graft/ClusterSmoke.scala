@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cluster-realism smoke: run the iterative + stored-state + streaming
   * families under `local-cluster[2,C,M]` — real executor JVMs, real
   * serialization, no driver-shared heap — the cheapest way to surface
@@ -59,7 +57,7 @@ object ClusterSmoke {
     val lake = new java.io.File(
       s"target/cluster-lake-${System.currentTimeMillis()}").getAbsolutePath
     val ckpt = new java.io.File(lake, "reliable-ckpt").getAbsolutePath
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("8")
       // 2 real executor JVMs x 4 cores x 2 GiB — separate processes,
       // full serialization boundary between driver and executors.
       .master("local-cluster[2,4,2048]")
@@ -67,16 +65,6 @@ object ClusterSmoke {
       // classes must be added explicitly (the first driver-local
       // assumption this smoke kills).
       .config("spark.executor.extraClassPath", classes)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
       // Isolated lake: stored-state builds must run on THIS cluster.
       .config("spark.graft.lake.root", lake)
       // Iteration pins go through reliable checkpoints — the

@@ -3,96 +3,64 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expressions.{DeflateLen, FloatVecDot, RollingHash, ShingleHashes, SimHashBits, SimHashPacked, VecDotI8, VecQuantizeI8}
+import graft.expressions._
 
-/** SparkSessionExtensions entry point: installs the graft native
-  * functions into any session via
-  * `spark.sql.extensions=graft.GraftExtensions` — the idiomatic way to
-  * ship custom Catalyst expressions with a library (works with
-  * spark-submit/connect configs, no code-side registration needed).
-  */
+/** The one way graft's native functions, the `TopKPerGroup` planner
+  * strategy and the `TopKRewrite` optimizer rule enter a session:
+  * `spark.sql.extensions=graft.GraftExtensions` (GraftSession sets it;
+  * `newSession()` children inherit it). The Column builders on the
+  * expression companions only `call_udf` these names, so a session
+  * built without the extension fails at analysis with Spark's
+  * unresolved-routine error. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator planner strategy (tier c): native top-k-per-group
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    // opt-in optimizer rewrite: plain row_number()<=k window SQL into
-    // the native operator (spark.graft.topk.autoRewrite=true)
+    // inert unless spark.graft.topk.autoRewrite=true
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - in-order double dot product of two float arrays"),
-      { exprs: Seq[Expression] => FloatVecDot(exprs(0), exprs(1)) }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "shingle_hashes(text, n) - distinct rolling hashes of word n-grams"),
-      { exprs: Seq[Expression] =>
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => other.eval().asInstanceOf[Int]
-        }
-        ShingleHashes(exprs(0), n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      info("rolling_hash", "rolling_hash(text, base, mod) - polynomial rolling hash over char codes"),
-      { exprs: Seq[Expression] =>
-        def longOf(e: Expression): Long = e.eval() match {
-          case i: Int => i.toLong
-          case l: Long => l
-        }
-        RollingHash(exprs(0), longOf(exprs(1)), longOf(exprs(2)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_bits"),
-      info("simhash_bits", "simhash_bits(text) - 64 SimHash bits over word 3-gram shingles"),
-      { exprs: Seq[Expression] => SimHashBits(exprs(0)) }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(text) - packed 64-bit SimHash (bit j == simhash_bits(text)[j])"),
-      { exprs: Seq[Expression] => SimHashPacked(exprs(0)) }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_q8"),
-      info("vec_q8", "vec_q8(v) - per-vector symmetric int8 quantization of array<float>"),
-      { exprs: Seq[Expression] => VecQuantizeI8(exprs(0)) }))
-    ext.injectFunction((
-      new FunctionIdentifier("deflate_len"),
-      info("deflate_len", "deflate_len(s) - zlib-deflate compressed length of a string/binary"),
-      { exprs: Seq[Expression] => DeflateLen(exprs(0)) }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot_i8"),
-      info("vec_dot_i8", "vec_dot_i8(a, b) - integer dot product of two array<tinyint>"),
-      { exprs: Seq[Expression] => VecDotI8(exprs(0), exprs(1)) }))
-    // The r11 functions resolve through the SAME builder their
-    // companion register() path uses — one definition per function, so
-    // extension-configured and register()-configured sessions can
-    // never drift apart on argument handling.
-    ext.injectFunction((
-      new FunctionIdentifier("lev_within"),
-      info("lev_within", "lev_within(a, b, k) - thresholded levenshtein: distance when <= k, -1 over"),
-      graft.expressions.LevWithin.build _))
-    ext.injectFunction((
-      new FunctionIdentifier("charbag64"),
-      info("charbag64", "charbag64(s) - packed 16x4-bit code-point-class histogram of a string"),
-      graft.expressions.CharBag64.buildBag _))
-    ext.injectFunction((
-      new FunctionIdentifier("bag_dist_lb"),
-      info("bag_dist_lb", "bag_dist_lb(a, b) - edit-distance lower bound from two packed char bags"),
-      graft.expressions.CharBag64.buildLb _))
-    ext.injectFunction((
-      new FunctionIdentifier("cms_merge"),
-      info("cms_merge", "cms_merge(sk) - distributed merge of serialized count-min sketches"),
-      graft.expressions.CmsMergeAgg.buildMerge _))
-    ext.injectFunction((
-      new FunctionIdentifier("cms_estimate"),
-      info("cms_estimate", "cms_estimate(sk, key) - CMS point count estimate for a bigint key"),
-      graft.expressions.CmsMergeAgg.buildEstimate _))
-    ext.injectFunction((
-      new FunctionIdentifier("cms_estimate_all"),
-      info("cms_estimate_all", "cms_estimate_all(sk, keys) - CMS point estimates for an array<bigint>"),
-      graft.expressions.CmsMergeAgg.buildEstimateAll _))
+    for ((name, usage, build) <- GraftExtensions.functions)
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in"),
+        build))
   }
+}
+
+object GraftExtensions {
+  /** The function catalog: (SQL name, usage, builder). */
+  val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", "vec_dot(a, b) - in-order double dot product of two float arrays",
+      FloatVecDot.build _),
+    ("vec_q8", "vec_q8(v) - per-vector symmetric int8 quantization of array<float>",
+      Int8Vec.buildQ8 _),
+    ("vec_dot_i8", "vec_dot_i8(a, b) - integer dot product of two array<tinyint>",
+      Int8Vec.buildDot _),
+    ("lsh_bands", "lsh_bands(v, n_bands, band_bits, plane_offset) - hyperplane-LSH band keys of an array<float>",
+      LshBands.build _),
+    ("nearest_centroid", "nearest_centroid(v, centroids) - index of the nearest centroid in a literal array<array<float>>",
+      NearestCentroid.build _),
+    ("shingle_hashes", "shingle_hashes(text, n) - distinct rolling hashes of word n-grams",
+      ShingleHashes.build _),
+    ("rolling_hash", "rolling_hash(text, base, mod) - polynomial rolling hash over char codes",
+      RollingHash.build _),
+    ("rolling_hash_all", "rolling_hash_all(text, k, base, mod) - rolling hashes of every k-char window",
+      RollingHashAll.build _),
+    ("simhash_bits", "simhash_bits(text) - 64 SimHash bits over word 3-gram shingles",
+      SimHashBits.build _),
+    ("simhash64", "simhash64(text) - packed 64-bit SimHash (bit j == simhash_bits(text)[j])",
+      SimHashPacked.build _),
+    ("deflate_len", "deflate_len(s) - zlib-deflate compressed length of a string/binary",
+      DeflateLen.build _),
+    ("lev_within", "lev_within(a, b, k) - thresholded levenshtein: distance when <= k, -1 over",
+      LevWithin.build _),
+    ("charbag64", "charbag64(s) - packed 16x4-bit code-point-class histogram of a string",
+      CharBag64.buildBag _),
+    ("bag_dist_lb", "bag_dist_lb(a, b) - edit-distance lower bound from two packed char bags",
+      CharBag64.buildLb _),
+    ("bloom_probe", "bloom_probe(key, bitset, n_hashes) - bigint key membership in a literal array<bigint> Bloom bitset",
+      BloomProbe.build _),
+    ("cms_merge", "cms_merge(sk) - distributed merge of serialized count-min sketches",
+      CmsMergeAgg.buildMerge _),
+    ("cms_estimate", "cms_estimate(sk, key) - CMS point count estimate for a bigint key",
+      CmsMergeAgg.buildEstimate _),
+    ("cms_estimate_all", "cms_estimate_all(sk, keys) - CMS point estimates for an array<bigint>",
+      CmsMergeAgg.buildEstimateAll _))
 }

@@ -64,15 +64,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, src, dst, replicas)
     spark.stop()

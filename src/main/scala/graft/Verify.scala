@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -11,27 +10,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the library's documented deployment shape: native functions,
-      // the TopKPerGroup strategy, and the opt-in TopKRewrite rule
-      // ride the session extensions (GraftSession sets the same)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // scan-split sizing: the test lake is a few single-file tables, so
-      // 4 MiB splits keep all cores busy; at production scale (128 MiB+
-      // files, thousands of them) the default 128 MiB is right — this is
-      // a local-corpus override, not a cluster recommendation.
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Actual output schema (Spark DDL) per query, captured from the

@@ -88,30 +88,20 @@ case class BloomProbe(child: Expression, bitset: Array[Long], nHashes: Int)
 }
 
 object BloomProbe {
-  @volatile private var registered = Set.empty[SparkSession]
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bloom_probe", { exprs: Seq[Expression] =>
-          // The bitset rides a foldable array<long> literal only while
-          // the call is BUILT; it is materialized to a JVM array here
-          // and never enters the resolved plan.
-          val m = exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          val n = exprs(2) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-            case other => other.eval().asInstanceOf[Int]
-          }
-          BloomProbe(exprs(0), m.toLongArray(), n)
-        }, "built-in")
-      registered += spark
+  def build(exprs: Seq[Expression]): Expression = {
+    // The bitset rides a foldable array<long> literal only while
+    // the call is BUILT; it is materialized to a JVM array here
+    // and never enters the resolved plan.
+    val m = exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val n = exprs(2) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+      case other => other.eval().asInstanceOf[Int]
     }
+    BloomProbe(exprs(0), m.toLongArray(), n)
   }
 
-  def bloomProbe(spark: SparkSession, key: Column, bitset: Array[Long], nHashes: Int): Column = {
-    register(spark)
+  def bloomProbe(spark: SparkSession, key: Column, bitset: Array[Long], nHashes: Int): Column =
     org.apache.spark.sql.functions.call_udf("bloom_probe", key,
       org.apache.spark.sql.functions.typedLit(bitset.toSeq),
       org.apache.spark.sql.functions.lit(nHashes))
-  }
 }

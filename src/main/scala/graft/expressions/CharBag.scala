@@ -111,33 +111,15 @@ case class BagDistLb(left: Expression, right: Expression) extends BinaryExpressi
 }
 
 object CharBag64 {
-  @volatile private var registered = Set.empty[org.apache.spark.sql.SparkSession]
-
-  /** Shared builders for both registration paths (extension inject and
-    * registry register) — one definition, no drift. */
   def buildBag(exprs: Seq[Expression]): Expression = CharBag64(exprs.head)
   def buildLb(exprs: Seq[Expression]): Expression = BagDistLb(exprs(0), exprs(1))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "charbag64", buildBag _, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bag_dist_lb", buildLb _, "built-in")
-      registered += spark
-    }
-  }
-
   def bagCol(spark: org.apache.spark.sql.SparkSession,
-             s: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    register(spark)
+             s: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_udf("charbag64", s)
-  }
 
   def lbCol(spark: org.apache.spark.sql.SparkSession,
             a: org.apache.spark.sql.Column,
-            b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    register(spark)
+            b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_udf("bag_dist_lb", a, b)
-  }
 }

@@ -83,10 +83,6 @@ object CmsMergeAgg {
     out.toByteArray
   }
 
-  @volatile private var registered = Set.empty[SparkSession]
-
-  /** Shared builders for both registration paths (extension inject and
-    * registry register) — one definition, no drift. */
   def buildMerge(exprs: Seq[Expression]): Expression =
     CmsMergeAgg(exprs.head).toAggregateExpression()
   def buildEstimate(exprs: Seq[Expression]): Expression =
@@ -94,35 +90,14 @@ object CmsMergeAgg {
   def buildEstimateAll(exprs: Seq[Expression]): Expression =
     CmsEstimateAll(exprs(0), exprs(1))
 
-  /** Register `cms_merge`/`cms_estimate` in the session registry
-    * (idempotent) — registry-based exposure keeps us off Spark 4's
-    * private Column internals, same pattern as [[FloatVecDot]]. */
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cms_merge", buildMerge _, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cms_estimate", buildEstimate _, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cms_estimate_all", buildEstimateAll _, "built-in")
-      registered += spark
-    }
-  }
-
-  def mergeCol(spark: SparkSession, sk: Column): Column = {
-    register(spark)
+  def mergeCol(spark: SparkSession, sk: Column): Column =
     org.apache.spark.sql.functions.call_udf("cms_merge", sk)
-  }
 
-  def estimateCol(spark: SparkSession, sk: Column, key: Column): Column = {
-    register(spark)
+  def estimateCol(spark: SparkSession, sk: Column, key: Column): Column =
     org.apache.spark.sql.functions.call_udf("cms_estimate", sk, key)
-  }
 
-  def estimateAllCol(spark: SparkSession, sk: Column, keys: Column): Column = {
-    register(spark)
+  def estimateAllCol(spark: SparkSession, sk: Column, keys: Column): Column =
     org.apache.spark.sql.functions.call_udf("cms_estimate_all", sk, keys)
-  }
 }
 
 /** Point-estimate lookup against serialized CMS bytes:

@@ -63,18 +63,8 @@ case class DeflateLen(child: Expression) extends UnaryExpression {
 }
 
 object DeflateLen {
-  @volatile private var registered = Set.empty[SparkSession]
+  def build(exprs: Seq[Expression]): Expression = DeflateLen(exprs(0))
 
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "deflate_len", { exprs: Seq[Expression] => DeflateLen(exprs(0)) }, "built-in")
-      registered += spark
-    }
-  }
-
-  def deflateLenNative(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def deflateLenNative(spark: SparkSession, c: Column): Column =
     org.apache.spark.sql.functions.call_udf("deflate_len", c)
-  }
 }

@@ -95,25 +95,12 @@ case class VecDotI8(left: Expression, right: Expression) extends BinaryExpressio
 }
 
 object Int8Vec {
-  @volatile private var registered = Set.empty[SparkSession]
+  def buildQ8(exprs: Seq[Expression]): Expression = VecQuantizeI8(exprs(0))
+  def buildDot(exprs: Seq[Expression]): Expression = VecDotI8(exprs(0), exprs(1))
 
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_q8", { exprs: Seq[Expression] => VecQuantizeI8(exprs(0)) }, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_dot_i8", { exprs: Seq[Expression] => VecDotI8(exprs(0), exprs(1)) }, "built-in")
-      registered += spark
-    }
-  }
-
-  def vecQ8(spark: SparkSession, v: Column): Column = {
-    register(spark)
+  def vecQ8(spark: SparkSession, v: Column): Column =
     org.apache.spark.sql.functions.call_udf("vec_q8", v)
-  }
 
-  def vecDotI8(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def vecDotI8(spark: SparkSession, a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_udf("vec_dot_i8", a, b)
-  }
 }

@@ -121,13 +121,8 @@ case class LevWithin(left: Expression, right: Expression, k: Int)
 }
 
 object LevWithin {
-  @volatile private var registered = Set.empty[org.apache.spark.sql.SparkSession]
-
-  /** The ONE expression builder both registration paths share
-    * (session-extension inject and registry register): a drift between
-    * them would make the same SQL text resolve differently per
-    * session-construction path. Accepts Int and Long literal
-    * thresholds (SQL integer literals arrive as either). */
+  /** Accepts Int and Long literal thresholds (SQL integer literals
+    * arrive as either). */
   def build(exprs: Seq[Expression]): Expression = {
     val k = exprs(2) match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
@@ -149,20 +144,10 @@ object LevWithin {
     LevWithin(exprs(0), exprs(1), k)
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "lev_within", build _, "built-in")
-      registered += spark
-    }
-  }
-
   def levCol(spark: org.apache.spark.sql.SparkSession,
              a: org.apache.spark.sql.Column,
              b: org.apache.spark.sql.Column,
-             k: Int): org.apache.spark.sql.Column = {
-    register(spark)
+             k: Int): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_udf(
       "lev_within", a, b, org.apache.spark.sql.functions.lit(k))
-  }
 }

@@ -93,28 +93,18 @@ case class LshBands(child: Expression, nBands: Int, bandBits: Int, planeOffset: 
 }
 
 object LshBands {
-  @volatile private var registered = Set.empty[SparkSession]
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "lsh_bands", { exprs: Seq[Expression] =>
-          def intArg(i: Int): Int = exprs(i) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-            case other => other.eval().asInstanceOf[Int]
-          }
-          LshBands(exprs(0), intArg(1), intArg(2), intArg(3))
-        }, "built-in")
-      registered += spark
+  def build(exprs: Seq[Expression]): Expression = {
+    def intArg(i: Int): Int = exprs(i) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+      case other => other.eval().asInstanceOf[Int]
     }
+    LshBands(exprs(0), intArg(1), intArg(2), intArg(3))
   }
 
   def lshBands(spark: SparkSession, vec: Column, nBands: Int, bandBits: Int,
-               planeOffset: Int = 0): Column = {
-    register(spark)
+               planeOffset: Int = 0): Column =
     org.apache.spark.sql.functions.call_udf("lsh_bands", vec,
       org.apache.spark.sql.functions.lit(nBands),
       org.apache.spark.sql.functions.lit(bandBits),
       org.apache.spark.sql.functions.lit(planeOffset))
-  }
 }

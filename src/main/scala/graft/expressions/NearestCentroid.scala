@@ -237,27 +237,17 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Float]])
 }
 
 object NearestCentroid {
-  @volatile private var registered = Set.empty[SparkSession]
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "nearest_centroid", { exprs: Seq[Expression] =>
-          // The centroid matrix rides a foldable array<array<float>>
-          // literal; materialize it once at build time.
-          val m = exprs(1).eval().asInstanceOf[ArrayData]
-          val cents = Array.tabulate(m.numElements()) { i =>
-            m.getArray(i).toFloatArray()
-          }
-          NearestCentroid(exprs(0), cents)
-        }, "built-in")
-      registered += spark
+  def build(exprs: Seq[Expression]): Expression = {
+    // The centroid matrix rides a foldable array<array<float>>
+    // literal; materialize it once at build time.
+    val m = exprs(1).eval().asInstanceOf[ArrayData]
+    val cents = Array.tabulate(m.numElements()) { i =>
+      m.getArray(i).toFloatArray()
     }
+    NearestCentroid(exprs(0), cents)
   }
 
-  def nearestCol(spark: SparkSession, vec: Column, cents: Array[Array[Float]]): Column = {
-    register(spark)
+  def nearestCol(spark: SparkSession, vec: Column, cents: Array[Array[Float]]): Column =
     org.apache.spark.sql.functions.call_udf("nearest_centroid", vec,
       org.apache.spark.sql.functions.typedLit(cents.map(_.toSeq).toSeq))
-  }
 }

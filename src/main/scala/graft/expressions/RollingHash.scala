@@ -42,25 +42,17 @@ case class RollingHash(child: Expression, base: Long, mod: Long) extends UnaryEx
 }
 
 object RollingHash {
-  @volatile private var registered = Set.empty[SparkSession]
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "rolling_hash", { exprs: Seq[Expression] =>
-          def longOf(e: Expression): Long = e.eval() match {
-            case i: Int => i.toLong
-            case l: Long => l
-          }
-          RollingHash(exprs(0), longOf(exprs(1)), longOf(exprs(2)))
-        }, "built-in")
-      registered += spark
-    }
+  /** Foldable INT or BIGINT argument as a Long (SQL integer literals
+    * arrive as either). */
+  private[expressions] def longOf(e: Expression): Long = e.eval() match {
+    case i: Int => i.toLong
+    case l: Long => l
   }
 
-  def rollingHashNative(spark: SparkSession, c: Column, base: Long, mod: Long): Column = {
-    register(spark)
+  def build(exprs: Seq[Expression]): Expression =
+    RollingHash(exprs(0), longOf(exprs(1)), longOf(exprs(2)))
+
+  def rollingHashNative(spark: SparkSession, c: Column, base: Long, mod: Long): Column =
     org.apache.spark.sql.functions.call_udf("rolling_hash", c,
       org.apache.spark.sql.functions.lit(base), org.apache.spark.sql.functions.lit(mod))
-  }
 }

@@ -67,29 +67,15 @@ case class RollingHashAll(child: Expression, k: Int, base: Long, mod: Long)
 }
 
 object RollingHashAll {
-  @volatile private var registered = Set.empty[SparkSession]
+  import RollingHash.longOf
 
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "rolling_hash_all", { exprs: Seq[Expression] =>
-          def longOf(e: Expression): Long = e.eval() match {
-            case i: Int => i.toLong
-            case l: Long => l
-          }
-          RollingHashAll(exprs(0), longOf(exprs(1)).toInt,
-            longOf(exprs(2)), longOf(exprs(3)))
-        }, "built-in")
-      registered += spark
-    }
-  }
+  def build(exprs: Seq[Expression]): Expression =
+    RollingHashAll(exprs(0), longOf(exprs(1)).toInt, longOf(exprs(2)), longOf(exprs(3)))
 
   def rollingHashAllNative(spark: SparkSession, c: Column, k: Int,
-                           base: Long, mod: Long): Column = {
-    register(spark)
+                           base: Long, mod: Long): Column =
     org.apache.spark.sql.functions.call_udf("rolling_hash_all", c,
       org.apache.spark.sql.functions.lit(k),
       org.apache.spark.sql.functions.lit(base),
       org.apache.spark.sql.functions.lit(mod))
-  }
 }

@@ -80,25 +80,15 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
-  @volatile private var registered = Set.empty[SparkSession]
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingle_hashes", { exprs: Seq[Expression] =>
-          val n = exprs(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-            case other => other.eval().asInstanceOf[Int]
-          }
-          ShingleHashes(exprs(0), n)
-        }, "built-in")
-      registered += spark
+  def build(exprs: Seq[Expression]): Expression = {
+    val n = exprs(1) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+      case other => other.eval().asInstanceOf[Int]
     }
+    ShingleHashes(exprs(0), n)
   }
 
-  def shingleHashesNative(spark: SparkSession, c: Column, n: Int = 3): Column = {
-    register(spark)
+  def shingleHashesNative(spark: SparkSession, c: Column, n: Int = 3): Column =
     org.apache.spark.sql.functions.call_udf("shingle_hashes", c,
       org.apache.spark.sql.functions.lit(n))
-  }
 }

@@ -93,20 +93,10 @@ case class SimHashPacked(child: Expression, seed: Long = 42L) extends UnaryExpre
 }
 
 object SimHashPacked {
-  @volatile private var registered = Set.empty[SparkSession]
+  def build(exprs: Seq[Expression]): Expression = SimHashPacked(exprs(0))
 
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash64", { exprs: Seq[Expression] => SimHashPacked(exprs(0)) }, "built-in")
-      registered += spark
-    }
-  }
-
-  def simhash64Native(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def simhash64Native(spark: SparkSession, c: Column): Column =
     org.apache.spark.sql.functions.call_udf("simhash64", c)
-  }
 }
 
 /** Codegen'd single-pass SimHash over a text column (see SimHashOps). */
@@ -129,18 +119,8 @@ case class SimHashBits(child: Expression, seed: Long = 42L) extends UnaryExpress
 }
 
 object SimHashBits {
-  @volatile private var registered = Set.empty[SparkSession]
+  def build(exprs: Seq[Expression]): Expression = SimHashBits(exprs(0))
 
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash_bits", { exprs: Seq[Expression] => SimHashBits(exprs(0)) }, "built-in")
-      registered += spark
-    }
-  }
-
-  def simhashBitsNative(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def simhashBitsNative(spark: SparkSession, c: Column): Column =
     org.apache.spark.sql.functions.call_udf("simhash_bits", c)
-  }
 }

@@ -61,22 +61,11 @@ case class FloatVecDot(left: Expression, right: Expression)
 }
 
 object FloatVecDot {
-  @volatile private var registered = Set.empty[SparkSession]
+  def build(exprs: Seq[Expression]): Expression = FloatVecDot(exprs(0), exprs(1))
 
-  /** Register `vec_dot` in the session's function registry (idempotent)
-    * and return a Column builder. Registry-based exposure keeps us off
-    * Spark 4's private Column internals. */
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.contains(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_dot", { exprs: Seq[Expression] => FloatVecDot(exprs(0), exprs(1)) }, "built-in")
-      registered += spark
-    }
-  }
-
-  def vecDot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    // call_udf resolves through the function registry at analysis time
+  /** `vec_dot` by name: call_udf resolves through the session's function
+    * registry at analysis time, which keeps us off Spark 4's private
+    * Column internals. */
+  def vecDot(spark: SparkSession, a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_udf("vec_dot", a, b)
-  }
 }

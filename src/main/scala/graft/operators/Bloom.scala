@@ -112,9 +112,8 @@ object Bloom {
   def mightContain(key: Column, bitset: Array[Long], nHashes: Int = 3): Column =
     mightContainLiteral(key, bitset, nHashes)
 
-  /** [[mightContain]] with the session at hand, so BIGINT keys take the
-    * native probe. (The Column-only overload cannot reach a session to
-    * register the kernel against.) */
+  /** [[mightContain]] for BIGINT keys through the native `bloom_probe`
+    * kernel. */
   def mightContain(spark: org.apache.spark.sql.SparkSession, key: Column,
                    bitset: Array[Long], nHashes: Int): Column =
     graft.expressions.BloomProbe.bloomProbe(spark, key, bitset, nHashes)

@@ -29,12 +29,11 @@ object Windows {
     * contract as `topKPerGroup`, but the shuffle carries at most
     * k rows per group per input partition instead of every row —
     * the map-side partial the window formulation cannot express.
-    * The planner strategy self-registers on first use. */
+    * Planned by the strategy GraftExtensions injects. */
   def topKPerGroupNative(df: DataFrame, k: Int, part: Seq[Column], order: Seq[Column]): DataFrame = {
     import org.apache.spark.sql.graftbridge.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder => CSortOrder}
     val spark = df.sparkSession
-    graft.plans.TopKPerGroupStrategy.ensureRegistered(spark)
     val child = df.queryExecution.analyzed
     // Plan-based resolution (handles qualified refs like "t.col" and
     // respects the session's case-sensitivity setting).

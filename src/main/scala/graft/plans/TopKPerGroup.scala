@@ -24,8 +24,7 @@ import org.apache.spark.sql.types.IntegerType
   * a rounding error. The final exec merges the survivors per group and
   * emits `rnk`.
   *
-  * Planned via `TopKPerGroupStrategy` (registered through
-  * `GraftExtensions` or `spark.experimental.extraStrategies`);
+  * Planned via `TopKPerGroupStrategy` (injected by `GraftExtensions`);
   * EnsureRequirements inserts the group-keyed exchange between the
   * partial and final execs from `requiredChildDistribution`.
   */
@@ -70,13 +69,6 @@ object TopKPerGroupStrategy extends SparkStrategy {
       TopKPerGroupExec(t.k, gExprs, t.orderExprs,
         rankAttr = Some(t.rankAttr), child = partial, withTies = t.withTies) :: Nil
     case _ => Nil
-  }
-
-  /** Idempotent, thread-safe registration into a session's experimental
-    * strategies (for sessions not configured with GraftExtensions). */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(this))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
   }
 }
 

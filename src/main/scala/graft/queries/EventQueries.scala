@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 import graft.operators.Windows
@@ -392,6 +392,22 @@ object EventQueries {
     try f finally spark.conf.set(key, prev)
   }
 
+  /** Run `stream` to completion into a uniquely named memory sink and
+    * return its rows. The sink's temp view is dropped before returning:
+    * the frame's plan was resolved when `spark.table` built it, so it
+    * stays usable and no `graft_stream_*` view outlives the call. */
+  private def drainToMemory(spark: SparkSession, tag: String, stream: Dataset[_]): DataFrame = {
+    val name = s"graft_stream_${tag}_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val query = stream.writeStream
+      .format("memory").queryName(name)
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+      .start()
+    try {
+      try query.processAllAvailable() finally query.stop()
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
+  }
+
   /** STREAMING gap-sessionization, driven end to end: the stateful
     * `flatMapGroupsWithState` sessionizer (`SessionStream.sessionize`,
     * one bounded open-session state per user, closed by gap or by
@@ -403,19 +419,12 @@ object EventQueries {
     import spark.implicits._
     val src = streamSourceFixture(spark, dir)
     val schema = spark.read.parquet(src).schema
-    val name = "graft_stream_sessions_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
     val sessions = graft.streaming.SessionStream.sessionize(
       spark.readStream.schema(schema).parquet(src)
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
         .withWatermark("ts", "1 second")
         .as[graft.streaming.SessionStream.Event])
-    val query = sessions.writeStream
-      .format("memory").queryName(name)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(name).where(col("user_id") >= 0)
+    drainToMemory(spark, "sessions", sessions).where(col("user_id") >= 0)
       .orderBy(col("user_id"), col("session_seq"))
   }
 
@@ -432,18 +441,11 @@ object EventQueries {
   def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val src = streamSourceFixture(spark, dir)
     val schema = spark.read.parquet(src).schema
-    val name = "graft_stream_dedup_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
     val deduped = graft.streaming.DedupStream.dropDupKeys(
       spark.readStream.schema(schema).parquet(src)
         .select(col("user_id"), col("event_type"), col("ts")),
       Seq("user_id", "event_type"), "30 days")
-    val query = deduped.writeStream
-      .format("memory").queryName(name)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(name).where(col("user_id") >= 0)
+    drainToMemory(spark, "dedup", deduped).where(col("user_id") >= 0)
       .select(col("user_id"), col("event_type"))
       .orderBy(col("user_id"), col("event_type"))
   }
@@ -466,14 +468,7 @@ object EventQueries {
       .select(col("user_id"), col("ts"), col("event_id"))
     val joined = graft.streaming.StreamJoin.purchasesWithRecentClicks(
       side("purchase"), side("click"), windowMinutes = 60, watermark = "1 second")
-    val name = "graft_stream_join_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(name).where(col("p_user") >= 0)
+    drainToMemory(spark, "join", joined).where(col("p_user") >= 0)
       .select(col("purchase_id").as("event_id"), col("p_user").as("user_id"),
         unix_micros(col("p_ts")).as("ts_us"), unix_micros(col("c_ts")).as("click_us"))
       .groupBy(col("event_id"), col("user_id"), col("ts_us"))
@@ -498,19 +493,12 @@ object EventQueries {
   def streamHopping(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val src = streamSourceFixture(spark, dir)
     val schema = spark.read.parquet(src).schema
-    val name = "graft_stream_hopping_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
     val agg = spark.readStream.schema(schema).parquet(src)
       .withWatermark("ts", "1 second")
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("value_cents"))
-    val query = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(name).where(col("event_type") =!= "sentinel")
+    drainToMemory(spark, "hopping", agg).where(col("event_type") =!= "sentinel")
       .select(unix_micros(col("w.start")).as("win_start_us"), col("event_type"),
         col("n_events"), col("value_cents"))
       .orderBy(col("win_start_us"), col("event_type"))

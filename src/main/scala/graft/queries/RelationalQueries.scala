@@ -319,10 +319,9 @@ object RelationalQueries {
         s"rewritten plan still contains a Window:\n$optimized")
     }(df)
 
-  /** The shared flag dance for every rewrite gate query: register the
-    * strategy + rule (inert while the flag is off, idempotent under
-    * both the extension and code-side paths), flip the opt-in flag for
-    * the duration of ONE optimization, require the native node fired,
+  /** The shared flag dance for every rewrite gate query: flip the
+    * opt-in flag (the extension-injected rule is inert while it is off)
+    * for the duration of ONE optimization, require the native node fired,
     * run the shape-specific assertion, and hand back the rewritten
     * plan as a DataFrame so the gate's write path executes it
     * regardless of later conf state. One definition — the save/set/
@@ -330,10 +329,6 @@ object RelationalQueries {
   private def withRewriteFlag(spark: SparkSession)(
       assertShape: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit)(
       df: => DataFrame): DataFrame = {
-    graft.plans.TopKPerGroupStrategy.ensureRegistered(spark)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TopKRewrite
     val flag = "spark.graft.topk.autoRewrite"
     val prev = spark.conf.getOption(flag)
     spark.conf.set(flag, "true")

@@ -493,8 +493,6 @@ object TextQueries {
     * exactly in the DuckDB oracle. */
   def charDecontaminate(d: DataFrame, isEval: Column,
                         k: Int = 24, stride: Int = 8): DataFrame = {
-    val spark = d.sparkSession
-    graft.expressions.RollingHash.register(spark)
     val norm = regexp_replace(lower(col("text")), "[^a-z0-9]", "")
     def grams(step: Int) = expr(
       s"transform(sequence(1, greatest(length(_norm) - ${k - 1}, 1), $step), " +
@@ -600,7 +598,6 @@ object TextQueries {
     */
   def dedupSpans(d: DataFrame, k: Int = 8): DataFrame = {
     val spark = d.sparkSession
-    graft.expressions.RollingHash.register(spark)
     val base = d.select(col("doc_id"), split(col("text"), " ").as("w"))
     // Word k-gram rolling hashes with their 1-based start position.
     // Docs shorter than k tokens emit no grams (mirrors the shingle
@@ -786,7 +783,6 @@ object TextQueries {
     */
   def winnow(d: DataFrame, w: Int = 8): DataFrame = {
     val spark = d.sparkSession
-    graft.expressions.RollingHash.register(spark)
     val k = 3
     val enc = 1L << 31
     val base = d.select(col("doc_id"), split(col("text"), " ").as("w"))

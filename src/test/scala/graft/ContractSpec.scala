@@ -1,8 +1,48 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract wiring guards: catch entry/oracle mismatches in the
   * spec suite instead of in the driver's correctness run. */
 class ContractSpec extends SparkSpec {
+
+  /** Resolve from the repo root, not the CWD: a forked test JVM can run
+    * with a different working directory, so walk up from user.dir until
+    * build.sbt appears. */
+  private lazy val repoRoot: Path = Iterator.iterate(
+      Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
+    .takeWhile(_ != null).take(5)
+    .find(p => Files.exists(p.resolve("build.sbt")))
+    .getOrElse(fail("could not locate the repo root (build.sbt) above user.dir"))
+
+  private def read(p: Path): String =
+    new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+
+  test("the TopKPerGroup strategy is planned exactly once per session") {
+    for (s <- Seq(spark, spark.newSession()))
+      assert(s.sessionState.planner.strategies.count(_ eq graft.plans.TopKPerGroupStrategy) === 1)
+  }
+
+  test("GraftExtensions is the only way functions, strategies and rules enter a session") {
+    // One session configuration (GraftSession.builder) and one function
+    // catalog (GraftExtensions): no second builder, no runtime install.
+    val sources = Files.walk(repoRoot.resolve("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = for {
+      p <- sources
+      (line, i) <- read(p).linesIterator.zipWithIndex
+      if line.contains("createOrReplaceTempFunction") || line.contains("experimental.extra") ||
+        (line.contains("SparkSession.builder()") && p.getFileName.toString != "GraftSession.scala")
+    } yield s"${repoRoot.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the README lists every catalog function") {
+    val readme = read(repoRoot.resolve("README.md"))
+    val missing = GraftExtensions.functions.map(_._1).filterNot(n => readme.contains(s"`$n("))
+    assert(missing.isEmpty, s"README does not list: $missing")
+  }
 
   test("every oracle SQL entry has a matching query entry") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -41,16 +81,7 @@ class ContractSpec extends SparkSpec {
     // last off-by-one — ev_streaming_parity now has its own line), so
     // the pin is read FROM the document instead of a hand-updated
     // number that can drift from it.
-    // Resolve from the repo root, not the CWD: a forked test JVM can run
-    // with a different working directory. build.sbt sits next to
-    // SURVEY.md, so walk up from user.dir until it appears.
-    val root = Iterator.iterate(
-        java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null).take(5)
-      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-      .getOrElse(fail("could not locate the repo root (build.sbt) above user.dir"))
-    val survey = new String(java.nio.file.Files.readAllBytes(
-      root.resolve("SURVEY.md")), java.nio.charset.StandardCharsets.UTF_8)
+    val survey = read(repoRoot.resolve("SURVEY.md"))
     val claimed = survey.linesIterator
       .count(l => l.startsWith("- [x]") &&
         ("""\[(q|q\+o)\]""".r.findFirstIn(l).isDefined))

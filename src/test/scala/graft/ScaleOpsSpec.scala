@@ -119,9 +119,15 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("GraftExtensions installs native functions via spark.sql.extensions") {
     // the shared test session is built by GraftSession, which sets the
-    // extensions conf — SQL-level access must resolve without manual
-    // registration.
-    val r = spark.sql(
+    // extensions conf — every catalog function must resolve from SQL,
+    // also in a newSession() child, with nothing registered by hand.
+    val child = spark.newSession()
+    assert(GraftExtensions.functions.map(_._1).distinct.size === 18)
+    for (s <- Seq(spark, child); (name, usage, _) <- GraftExtensions.functions) {
+      val described = s.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
+      assert(described.exists(_.contains(usage)), s"$name: ${described.mkString(" | ")}")
+    }
+    val r = child.sql(
       "SELECT vec_dot(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d, " +
         "size(shingle_hashes('a b c d', 3)) AS s, " +
         "size(simhash_bits('a b c d')) AS b").head

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, PlanCache}
 
@@ -55,6 +56,49 @@ class SessionCacheLifecycleSpec extends SparkSpec {
     Dedup.connectedComponents(pairs).count()
     assert(Dedup.ccCacheSize === 1)
     Dedup.clearCcCache()
+  }
+
+  test("a retired child session that used every Column builder is collectable") {
+    val ref = useEveryBuilderInChild()
+    var rounds = 0
+    while (ref.get != null && rounds < 20) {
+      System.gc(); Thread.sleep(100); rounds += 1
+    }
+    assert(ref.get == null, s"child session still reachable after $rounds GC rounds")
+  }
+
+  /** Resolves every public native-function Column builder in a fresh
+    * child session, then lets the child go; only a weak reference
+    * escapes. */
+  private def useEveryBuilderInChild(): java.lang.ref.WeakReference[SparkSession] = {
+    import graft.expressions._
+    val s2 = spark.newSession()
+    val in = s2.range(2).select(
+      array(lit(1f), lit(2f)).as("v"), array(lit(1.toByte), lit(2.toByte)).as("q"),
+      lit("a b c d").as("t"), col("id").as("k"), lit(Array.emptyByteArray).as("sk"))
+    val cols = Seq(
+      FloatVecDot.vecDot(s2, col("v"), col("v")),
+      Int8Vec.vecQ8(s2, col("v")),
+      Int8Vec.vecDotI8(s2, col("q"), col("q")),
+      LshBands.lshBands(s2, col("v"), 2, 4),
+      NearestCentroid.nearestCol(s2, col("v"), Array(Array(1f, 0f), Array(0f, 1f))),
+      ShingleHashes.shingleHashesNative(s2, col("t")),
+      RollingHash.rollingHashNative(s2, col("t"), 31L, 1000000007L),
+      RollingHashAll.rollingHashAllNative(s2, col("t"), 3, 31L, 1000000007L),
+      SimHashBits.simhashBitsNative(s2, col("t")),
+      SimHashPacked.simhash64Native(s2, col("t")),
+      DeflateLen.deflateLenNative(s2, col("t")),
+      LevWithin.levCol(s2, col("t"), col("t"), 2),
+      CharBag64.bagCol(s2, col("t")),
+      CharBag64.lbCol(s2, col("k"), col("k")),
+      BloomProbe.bloomProbe(s2, col("k"), Array(1L, 2L), 3),
+      graft.operators.Bloom.mightContain(s2, col("k"), Array(1L, 2L), 3),
+      CmsMergeAgg.estimateCol(s2, col("sk"), col("k")),
+      CmsMergeAgg.estimateAllCol(s2, col("sk"), array(col("k"))))
+    // analysis runs in the child: each name resolves from its registry
+    assert(in.select(cols: _*).schema.size === cols.size)
+    assert(in.agg(CmsMergeAgg.mergeCol(s2, col("sk"))).schema.size === 1)
+    new java.lang.ref.WeakReference(s2)
   }
 
   test("a stopping SparkContext purges every entry of its sessions (listener path)") {

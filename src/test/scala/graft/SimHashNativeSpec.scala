@@ -33,7 +33,6 @@ class SimHashNativeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
     // pack the array form and compare to the packed kernel:
     // bit j of simhash64 == simhash_bits[j]
-    graft.expressions.SimHashBits.register(spark)
     val packedFromBits = expr(
       "aggregate(zip_with(simhash_bits(text), sequence(0, 63), " +
         "(b, j) -> shiftleft(b, j)), 0L, (acc, v) -> acc | v)")
