@@ -100,73 +100,28 @@ object CmsMergeAgg {
     org.apache.spark.sql.functions.call_udf("cms_estimate_all", sk, keys)
 }
 
-/** Point-estimate lookup against serialized CMS bytes:
-  * `cms_estimate(sk, key)` = the sketch's (one-sided, never-under)
-  * count estimate for `key`. Deserialization is memoized per expression
-  * instance (tasks get their own serialized copies, so the cache is
-  * task-local and thread-confined): the common shape — a single merged
-  * sketch broadcast against a bounded candidate list — deserializes
-  * once per task and answers each row with `estimateCount` only. The
-  * memo is EXACT: a 64-bit fingerprint of 16 stride-sampled 8-byte
-  * windows serves as a cheap NEGATIVE filter (fingerprints differ ->
-  * definitely a different sketch -> re-deserialize without touching
-  * the cached bytes), and a fingerprint match is CONFIRMED by a full
-  * memcmp against the retained bytes before the cached sketch is
-  * trusted. Sampled bytes alone were not a safe key: two sparse
-  * same-shape monthly sketches can agree on every sampled window (most
-  * counter cells are zero), and a false hit would silently answer from
-  * the wrong month. The memcmp costs one vectorized pass over the
-  * sketch per row on the hit path — bounded by design, the candidate
-  * list is calendar x k rows, never a fact scan. Not codegen'd for the
-  * same reason.
-  */
-/** Batch point-estimate lookup: `cms_estimate_all(sk, keys)` = the
-  * sketch's estimates for EVERY key of an array<long>, one
-  * deserialization per sketch ROW instead of per (sketch, key) pair.
-  * Exists because the per-key form's exact task-local memo must
-  * confirm a fingerprint hit with a full memcmp of the sketch bytes —
-  * sound, but a serve that fans one broadcast ~1.1 MB merged sketch
-  * across thousands of candidate rows pays one megabyte-scale
-  * compare-and-copy PER ROW (~2.1 s of the stored heavy-hitter serve's
-  * 2.4 s at sf0.1, in one task). Here the bounded candidate list rides
-  * ONE array cell, the sketch bytes are read once, and each key costs
-  * exactly `estimateCount` — the same estimates, row for row. */
-case class CmsEstimateAll(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, org.apache.spark.sql.types.ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"cms_estimate_all expects (binary, array<bigint>), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(sk: Any, keys: Any): Any = {
-    val sketch = CountMinSketch.readFrom(
-      new ByteArrayInputStream(sk.asInstanceOf[Array[Byte]]))
-    val arr = keys.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val out = new Array[Long](arr.numElements())
-    var i = 0
-    while (i < out.length) { out(i) = sketch.estimateCount(arr.getLong(i)); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "cms_estimate_all"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CmsEstimateAll =
-    copy(left = newLeft, right = newRight)
-}
-
-case class CmsEstimate(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedFp: Long = 0L
-  @transient private var cachedSketch: CountMinSketch = _
+/** The deserialized sketch of the last bytes seen, shared by
+  * `cms_estimate` and `cms_estimate_all`. One memo per expression
+  * instance (tasks get their own serialized copies, so it is task-local
+  * and thread-confined): the common shape — a single merged or literal
+  * sketch against many candidate rows — deserializes once and answers
+  * each row from the cached sketch. The memo is EXACT: a 64-bit
+  * fingerprint of 16 stride-sampled 8-byte windows serves as a cheap
+  * NEGATIVE filter (fingerprints differ -> definitely a different sketch
+  * -> re-deserialize without touching the cached bytes), and a
+  * fingerprint match is CONFIRMED by `Arrays.equals` against the
+  * retained bytes before the cached sketch is trusted (the same array,
+  * as a literal hands every row, confirms by reference). Sampled bytes
+  * alone were not a safe key: two sparse same-shape monthly sketches can
+  * agree on every sampled window (most counter cells are zero), and a
+  * false hit would silently answer from the wrong month. A hit on equal
+  * but distinct arrays costs one vectorized compare of the sketch per
+  * row — bounded by design, the candidate list is calendar x k rows,
+  * never a fact scan. Not codegen'd for the same reason. */
+private[expressions] final class CmsMemo {
+  private var bytes: Array[Byte] = _
+  private var fp: Long = 0L
+  private var sketch: CountMinSketch = _
 
   /** 64-bit mix of 16 8-byte windows at even strides across the array
     * (covering head and tail) — reads 128 bytes regardless of sketch
@@ -188,6 +143,65 @@ case class CmsEstimate(left: Expression, right: Expression)
     h
   }
 
+  def apply(b: Array[Byte]): CountMinSketch = {
+    val f = fingerprint(b)
+    if (sketch == null || f != fp || !java.util.Arrays.equals(b, bytes)) {
+      sketch = CountMinSketch.readFrom(new ByteArrayInputStream(b))
+      bytes = b
+      fp = f
+    }
+    sketch
+  }
+}
+
+/** Batch point-estimate lookup: `cms_estimate_all(sk, keys)` = the
+  * sketch's estimates for EVERY key of an array<long>. Exists because a
+  * serve that fans one broadcast ~1.1 MB merged sketch across thousands
+  * of candidate rows through the per-key form pays one megabyte-scale
+  * compare PER ROW on the memo's hit path (~2.1 s of the stored
+  * heavy-hitter serve's 2.4 s at sf0.1, in one task). Here the bounded
+  * candidate list rides ONE array cell, the sketch goes through the same
+  * memo, and each key costs exactly `estimateCount` — the same
+  * estimates, row for row. */
+case class CmsEstimateAll(left: Expression, right: Expression)
+  extends BinaryExpression with CodegenFallback {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (BinaryType, org.apache.spark.sql.types.ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"cms_estimate_all expects (binary, array<bigint>), got ($l, $r)")
+    }
+
+  @transient private lazy val memo = new CmsMemo
+
+  override protected def nullSafeEval(sk: Any, keys: Any): Any = {
+    val sketch = memo(sk.asInstanceOf[Array[Byte]])
+    val arr = keys.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val out = new Array[Long](arr.numElements())
+    var i = 0
+    while (i < out.length) { out(i) = sketch.estimateCount(arr.getLong(i)); i += 1 }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  override def dataType: DataType =
+    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "cms_estimate_all"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CmsEstimateAll =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Point-estimate lookup against serialized CMS bytes:
+  * `cms_estimate(sk, key)` = the sketch's (one-sided, never-under)
+  * count estimate for `key`, through the exact [[CmsMemo]]. */
+case class CmsEstimate(left: Expression, right: Expression)
+  extends BinaryExpression with CodegenFallback {
+
+  @transient private lazy val memo = new CmsMemo
+
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
@@ -195,18 +209,8 @@ case class CmsEstimate(left: Expression, right: Expression)
         s"cms_estimate expects (binary, bigint), got ($l, $r)")
     }
 
-  override protected def nullSafeEval(sk: Any, key: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    val fp = fingerprint(bytes)
-    val hit = cachedSketch != null && fp == cachedFp &&
-      java.util.Arrays.equals(bytes, cachedBytes)
-    if (!hit) {
-      cachedSketch = CountMinSketch.readFrom(new ByteArrayInputStream(bytes))
-      cachedBytes = bytes
-      cachedFp = fp
-    }
-    cachedSketch.estimateCount(key.asInstanceOf[Long])
-  }
+  override protected def nullSafeEval(sk: Any, key: Any): Any =
+    memo(sk.asInstanceOf[Array[Byte]]).estimateCount(key.asInstanceOf[Long])
 
   override def dataType: DataType = LongType
   override def prettyName: String = "cms_estimate"

@@ -161,11 +161,8 @@ object EventQueries {
       .agg(
         min(when(col("event_type") === "signup", col("ts_us"))).as("signup_us"),
         count(when(col("event_type") === "signup", lit(1))).as("n_signups"),
-        count(when(col("event_type") === "purchase", lit(1))).as("n_purchases"))
-      .join(
-        events(spark, dir).where(col("event_type") === "purchase")
-          .groupBy(col("user_id").as("u2")).agg(min(col("ts_us")).as("first_purchase_us")),
-        col("user_id") === col("u2"), "left")
+        count(when(col("event_type") === "purchase", lit(1))).as("n_purchases"),
+        min(when(col("event_type") === "purchase", col("ts_us"))).as("first_purchase_us"))
       .select(col("user_id"), col("signup_us"),
         when(col("signup_us").isNotNull && col("first_purchase_us") >= col("signup_us"),
           col("first_purchase_us")).as("purchase_after_signup_us"),
@@ -418,9 +415,8 @@ object EventQueries {
   def streamSessions(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     import spark.implicits._
     val src = streamSourceFixture(spark, dir)
-    val schema = spark.read.parquet(src).schema
     val sessions = graft.streaming.SessionStream.sessionize(
-      spark.readStream.schema(schema).parquet(src)
+      spark.readStream.schema(TableLoader.schemaOf(spark, src)).parquet(src)
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
         .withWatermark("ts", "1 second")
         .as[graft.streaming.SessionStream.Event])
@@ -440,9 +436,8 @@ object EventQueries {
     * is deterministic. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val src = streamSourceFixture(spark, dir)
-    val schema = spark.read.parquet(src).schema
     val deduped = graft.streaming.DedupStream.dropDupKeys(
-      spark.readStream.schema(schema).parquet(src)
+      spark.readStream.schema(TableLoader.schemaOf(spark, src)).parquet(src)
         .select(col("user_id"), col("event_type"), col("ts")),
       Seq("user_id", "event_type"), "30 days")
     drainToMemory(spark, "dedup", deduped).where(col("user_id") >= 0)
@@ -462,7 +457,7 @@ object EventQueries {
     * unmatched purchase is emitted before the stream drains. */
   def streamJoinQ(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val src = streamSourceFixture(spark, dir)
-    val schema = spark.read.parquet(src).schema
+    val schema = TableLoader.schemaOf(spark, src)
     def side(t: String) = spark.readStream.schema(schema).parquet(src)
       .where(col("event_type") === t || col("user_id") < 0)
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -492,8 +487,7 @@ object EventQueries {
     * sliding-window stream holds. */
   def streamHopping(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
     val src = streamSourceFixture(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    val agg = spark.readStream.schema(schema).parquet(src)
+    val agg = spark.readStream.schema(TableLoader.schemaOf(spark, src)).parquet(src)
       .withWatermark("ts", "1 second")
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),

@@ -359,8 +359,7 @@ object GraphQueries {
     val stateRoot = LakeRoot.child(base, "state")
     val foldBudget = spark.conf.getOption("spark.graft.stream.edgesFoldBudget")
       .map(_.toInt).getOrElse(4)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(TableLoader.schemaOf(spark, src))
       .option("maxFilesPerTrigger", "1").parquet(src)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

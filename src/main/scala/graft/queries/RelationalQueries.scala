@@ -918,8 +918,7 @@ object RelationalQueries {
         .repartition(4).write.mode("overwrite").parquet(staging)
     }
     val sketchRoot = LakeRoot.child(base, "sketches")
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(TableLoader.schemaOf(spark, src))
       .option("maxFilesPerTrigger", "1").parquet(src)
     graft.streaming.IndexStream.runVersionedSink(
         stream, sketchRoot,
@@ -1378,15 +1377,11 @@ object RelationalQueries {
     * the EUROPE suppliers offering the minimum unit cost. Adapted: unit
     * cost is derived from lineitem (`min(round(extendedprice/quantity *
     * 100))` per part×supplier) in place of the absent partsupp table.
-    * The per-part min aggregate joins back BROADCAST (it is small after
-    * the part filter), so the fact relation is never self-joined at
-    * shuffle width. The per-(part, supplier) cost aggregate — the widest
-    * aggregation in the suite — feeds BOTH the per-part min and the
-    * join-back, and the round-5 plan audit showed the static plan runs
-    * it twice (no ReusedExchange; two full lineitem scans): the lazy
-    * local checkpoint on `pc` — the doubly-consumed node, AFTER the
-    * part/region filters have shrunk it — pins the aggregation to one
-    * materialized computation. */
+    * The per-part minimum is a window (`min over (partition by
+    * p_partkey)`) on the filtered part×supplier costs, so the widest
+    * aggregation in the suite is computed once, inside the one lazy plan:
+    * no self-join back onto the minimum, and no eager job while the
+    * DataFrame is built. */
   def q2MinCostSupplier(spark: SparkSession, dir: String): DataFrame = {
     val unitCents = round(col("l_extendedprice") / col("l_quantity") * 100).cast("long")
     val cost = t(spark, dir, "lineitem")
@@ -1402,12 +1397,10 @@ object RelationalQueries {
     val part = t(spark, dir, "part")
       .where(col("p_type") === "STANDARD" && col("p_size") <= 5)
       .select(col("p_partkey"))
-    val pc = cost.join(broadcast(eu), col("l_suppkey") === col("s_suppkey"))
+    cost.join(broadcast(eu), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-      .localCheckpoint(false)
-    val mn = pc.groupBy(col("p_partkey").as("m_key")).agg(min(col("unit_cents")).as("min_cents"))
-    pc.join(broadcast(mn),
-        col("p_partkey") === col("m_key") && col("unit_cents") === col("min_cents"))
+      .withColumn("min_cents", min(col("unit_cents")).over(Window.partitionBy(col("p_partkey"))))
+      .where(col("unit_cents") === col("min_cents"))
       .select(col("p_partkey"), col("s_name"), col("n_name"),
         col("acctbal_cents"), col("unit_cents"))
       .orderBy(col("p_partkey"), col("s_name"))

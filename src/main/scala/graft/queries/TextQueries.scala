@@ -555,8 +555,7 @@ object TextQueries {
           .distinct(),
         idxRoot)
     val verdictRoot = graft.sinks.LakeRoot.child(base, "verdicts")
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(TableLoader.schemaOf(spark, src))
       .option("maxFilesPerTrigger", "1").parquet(src)
     val q = graft.streaming.IndexStream.runVersionedSink(
       stream, verdictRoot,

@@ -339,8 +339,7 @@ object VectorQueries {
         Similarity.adaptiveCentroids(graft.operators.PlanCache.countMemo(all))))
     val cents = Similarity.readCommittedCentroids(spark, centRoot)
     val root = graft.sinks.LakeRoot.child(base, "lists")
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(TableLoader.schemaOf(spark, src))
       .option("maxFilesPerTrigger", "2").parquet(src)
     val q = graft.streaming.IndexStream.runVersionedSink(
       stream, root, b => Similarity.assignToCentroids(b, cents),

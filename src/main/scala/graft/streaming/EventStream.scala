@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.TableLoader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -45,8 +46,7 @@ object EventStream {
     * batch, so distinct windows never share a partition write. */
   def runLakeSink(spark: SparkSession, eventsDir: String, lakePath: String,
                   checkpointDir: Option[String] = None): StreamingQuery = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
+    val stream = spark.readStream.schema(TableLoader.schemaOf(spark, eventsDir)).parquet(eventsDir)
     val writer = tumblingAgg(stream)
       .withColumn("window_time", date_format(col("window_start"), "yyyy-MM-dd'T'HH-mm-ss"))
       .writeStream
@@ -73,8 +73,7 @@ object EventStream {
     * follows the touched day-partitions, not lake size. */
   def runUpsertSink(spark: SparkSession, eventsDir: String, lakePath: String,
                     checkpointDir: Option[String] = None): StreamingQuery = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
+    val stream = spark.readStream.schema(TableLoader.schemaOf(spark, eventsDir)).parquet(eventsDir)
     val writer = tumblingAgg(stream)
       .withColumn("window_date", to_date(col("window_start")))
       .writeStream
@@ -95,8 +94,7 @@ object EventStream {
     * with availableNow (bounded backfill) into an in-memory sink;
     * returns the query for the caller to await. */
   def runFileStream(spark: SparkSession, eventsDir: String, queryName: String): StreamingQuery = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
+    val stream = spark.readStream.schema(TableLoader.schemaOf(spark, eventsDir)).parquet(eventsDir)
     tumblingAgg(stream)
       .writeStream
       .queryName(queryName)

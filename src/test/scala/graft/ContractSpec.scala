@@ -38,6 +38,24 @@ class ContractSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("parquet schemas are inferred only in TableLoader; q2 pins nothing") {
+    // Every inferred parquet schema goes through TableLoader.schemaOf's
+    // cache; q2's per-part minimum is a window, not a checkpointed self-join.
+    val inference = """read\.parquet\([^)]*\)\.schema""".r
+    val offenders = for {
+      p <- Files.walk(repoRoot.resolve("src/main")).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala") && p.getFileName.toString != "TableLoader.scala"
+      (line, i) <- read(p).linesIterator.zipWithIndex
+      if inference.findFirstIn(line).isDefined
+    } yield s"${repoRoot.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val relational = read(repoRoot.resolve("src/main/scala/graft/queries/RelationalQueries.scala"))
+    val q2 = relational.substring(relational.indexOf("def q2MinCostSupplier"))
+    val q2Body = q2.substring(0, q2.indexOf("\n  /**"))
+    assert(q2Body.contains("Window.partitionBy"))
+    assert(!q2Body.contains("localCheckpoint"))
+  }
+
   test("the README lists every catalog function") {
     val readme = read(repoRoot.resolve("README.md"))
     val missing = GraftExtensions.functions.map(_._1).filterNot(n => readme.contains(s"`$n("))

@@ -91,9 +91,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q2: correlated-min join back is broadcast; fact never self-joined at shuffle width") {
+    // The per-part minimum is a window over the broadcast-joined costs:
+    // one lazy plan, one lineitem scan, no join back onto the minimum.
     val p = plan(RelationalQueries.q2MinCostSupplier(spark, Sf))
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast min-join:\n${p.take(600)}")
+    assert(p.contains("BroadcastHashJoin"), s"expected broadcast dimension joins:\n${p.take(600)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
+    assert(p.contains("Window"), s"expected a window minimum:\n${p.take(600)}")
+    assert("lineitem\\.parquet".r.findAllIn(p).size === 1, s"expected one lineitem scan:\n$p")
   }
 
   test("q16: exclusion list is a broadcast anti join below the distinct aggregation") {

@@ -4,9 +4,17 @@ import java.io.{File, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import java.nio.file.Files
 
-import graft.sources.{XmlRecordSource, ZipSource}
+import graft.sources.{TableLoader, XmlRecordSource, ZipSource}
 import graft.sinks.PartitionedWriter
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -66,5 +74,93 @@ class SourcesSpec extends SparkSpec {
     assert(PartitionedWriter.write(df2, out, Seq("y", "m")))
     val back = spark.read.parquet(out)
     assert(back.where(col("m") === "01").count() === 1)
+  }
+
+  /** Write one row as a bare parquet file (no Spark schema in the footer,
+    * so inference reads the parquet types alone) with the given message
+    * type; `fill` sets the row's fields. */
+  private def writeParquet(path: String, messageType: String)(fill: SimpleGroup => Unit): Unit = {
+    val mt = MessageTypeParser.parseMessageType(messageType)
+    val w = ExampleParquetWriter.builder(new Path(path)).withType(mt)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+    val g = new SimpleGroup(mt)
+    fill(g)
+    try w.write(g) finally w.close()
+  }
+
+  test("TableLoader's pinned schema equals the inferred one for every table") {
+    for (dir <- Seq(Sf, s"${new File(Sf).getParent}/sf0.01"); t <- TableLoader.tables) {
+      val inferred = spark.read.parquet(s"$dir/$t.parquet").schema
+      // StructField equality covers names, types, nullability and metadata.
+      assert(TableLoader.load(spark, dir, t).schema === inferred, s"$dir/$t")
+    }
+  }
+
+  test("a file rewritten at the same path with another schema is re-inferred") {
+    val dir = Files.createTempDirectory("graftschema").toFile.getAbsolutePath
+    val file = s"$dir/region.parquet"
+    writeParquet(file, "message t { required int64 a; }")(_.add("a", 1L))
+    assert(TableLoader.load(spark, dir, "region").schema.fieldNames.toSeq === Seq("a"))
+    val fs = new Path(file).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = fs.getFileStatus(new Path(file)).getModificationTime
+    writeParquet(file, "message t { required int64 a; required binary b (UTF8); }") { g =>
+      g.add("a", 2L); g.add("b", "x")
+    }
+    fs.setTimes(new Path(file), before + 5000L, -1L)
+    val reread = TableLoader.load(spark, dir, "region")
+    assert(reread.schema.fieldNames.toSeq === Seq("a", "b"))
+    assert(reread.collect().map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((2L, "x")))
+  }
+
+  test("flipping spark.sql.parquet.binaryAsString changes the loaded schema") {
+    val dir = Files.createTempDirectory("graftbinary").toFile.getAbsolutePath
+    writeParquet(s"$dir/region.parquet", "message t { required int64 a; optional binary p; }") { g =>
+      g.add("a", 1L); g.add("p", Binary.fromString("x"))
+    }
+    val key = "spark.sql.parquet.binaryAsString"
+    val prior = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(TableLoader.load(spark, dir, "region").schema("p").dataType === BinaryType)
+      spark.conf.set(key, "true")
+      assert(TableLoader.load(spark, dir, "region").schema("p").dataType === StringType)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a second load of one table runs no Spark job") {
+    // A fresh copy of a table, so the first load is a cache miss whatever
+    // ran before in this JVM: it must run the footer job the listener has
+    // to see, and the second load must run none.
+    val dir = Files.createTempDirectory("graftbind").toFile.getAbsolutePath
+    Files.copy(new File(s"$Sf/orders.parquet").toPath, new File(s"$dir/orders.parquet").toPath)
+    val group = s"graft-bind-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    def jobsOf(label: String)(body: => Unit): Int = {
+      sc.setJobGroup(s"$group-$label", label)
+      try body finally sc.clearJobGroup()
+      // Listener events arrive in order: once a marker job is seen, every
+      // job of `body` has been counted.
+      sc.setJobGroup(s"$group-$label-marker", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.containsKey(s"$group-$label-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.containsKey(s"$group-$label-marker"), "listener never saw the marker job")
+      Option(jobs.get(s"$group-$label")).map(_.intValue).getOrElse(0)
+    }
+    try {
+      assert(jobsOf("first")(TableLoader.load(spark, dir, "orders")) >= 1)
+      assert(jobsOf("second")(TableLoader.load(spark, dir, "orders")) === 0)
+    } finally sc.removeSparkListener(listener)
   }
 }
