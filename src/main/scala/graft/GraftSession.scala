@@ -39,6 +39,13 @@ object GraftSession {
       // pure driver latency on ANY deployment that serves more than a
       // handful of distinct plans (static conf: set before the context).
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // Spark keys that codegen cache on the thread's context
+      // classloader, and with artifact isolation on, every session gets
+      // a classloader of its own. Each streaming query starts on a
+      // cloned session (fresh UUID, fresh classloader), so every stream
+      // start recompiled the same state-store classes. graft adds no
+      // session artifacts (jars, files), so nothing relies on isolation.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
 
   def getOrCreate(): SparkSession = {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
@@ -366,43 +367,29 @@ object EventQueries {
         .write.mode("overwrite").parquet(staging)
     }
 
-  /** Run `f` with the session's shuffle-partition count — which fixes
-    * the STATE STORE partition count of any streaming query started
-    * inside — set to `spark.graft.stream.statePartitions` (default 8).
-    * State partitioning is priced per partition per micro-batch (a
-    * store commit each), so it should be sized to STATE VOLUME, not to
-    * the batch parallelism of the surrounding session: at this lake's
-    * state size (tens of thousands of live keys) 32 partitions cost
-    * 4x the commits of 8 for zero added parallelism. A production
-    * deployment with hundreds of millions of live keys raises the
-    * knob; the checkpoint pins whatever was set at first start. Only
-    * the streaming queries below use this — batch plans keep the
-    * session default. The set/restore mutates the shared session conf,
-    * so these queries must not be SUBMITTED concurrently from one
-    * session (running them sequentially, as Verify/Bench do, is the
-    * supported mode; concurrent use needs separate sessions). */
-  private def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      spark.conf.get("spark.graft.stream.statePartitions", "8"))
-    try f finally spark.conf.set(key, prev)
-  }
-
   /** Run `stream` to completion into a uniquely named memory sink and
-    * return its rows. The sink's temp view is dropped before returning:
-    * the frame's plan was resolved when `spark.table` built it, so it
-    * stays usable and no `graft_stream_*` view outlives the call. */
+    * return its rows. State partitions follow the session's
+    * `spark.sql.shuffle.partitions`. The query checkpoints into its own
+    * directory (under `spark.sql.streaming.checkpointLocation` if set,
+    * else the JVM temp dir), deleted after `stop()`; the sink's temp
+    * view is dropped too, since `spark.table` has already resolved the
+    * frame's plan. Neither outlives the call. */
   private def drainToMemory(spark: SparkSession, tag: String, stream: Dataset[_]): DataFrame = {
     val name = s"graft_stream_${tag}_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val query = stream.writeStream
-      .format("memory").queryName(name)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
+    val ckpt = new Path(spark.conf.getOption("spark.sql.streaming.checkpointLocation")
+      .getOrElse(System.getProperty("java.io.tmpdir")), name)
     try {
+      val query = stream.writeStream
+        .format("memory").queryName(name)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+        .start()
       try query.processAllAvailable() finally query.stop()
       spark.table(name)
-    } finally spark.catalog.dropTempView(name)
+    } finally {
+      spark.catalog.dropTempView(name)
+      ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ckpt, true)
+    }
   }
 
   /** STREAMING gap-sessionization, driven end to end: the stateful
@@ -412,7 +399,7 @@ object EventQueries {
     * the events parquet and must reproduce the batch `ev_sessionize`
     * oracle hash-exactly — the strongest check a streaming operator can
     * get, not a spec on toy rows. */
-  def streamSessions(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamSessions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val src = streamSourceFixture(spark, dir)
     val sessions = graft.streaming.SessionStream.sessionize(
@@ -434,7 +421,7 @@ object EventQueries {
     * key is emitted, so arrival-order nondeterminism in which
     * duplicate row survives is projected away — the streamed key set
     * is deterministic. */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     val src = streamSourceFixture(spark, dir)
     val deduped = graft.streaming.DedupStream.dropDupKeys(
       spark.readStream.schema(TableLoader.schemaOf(spark, src)).parquet(src)
@@ -455,7 +442,7 @@ object EventQueries {
     * rides BOTH side filters (`user_id < 0`) so the trailing micro-batch
     * advances the watermark past every purchase's window and every
     * unmatched purchase is emitted before the stream drains. */
-  def streamJoinQ(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamJoinQ(spark: SparkSession, dir: String): DataFrame = {
     val src = streamSourceFixture(spark, dir)
     val schema = TableLoader.schemaOf(spark, src)
     def side(t: String) = spark.readStream.schema(schema).parquet(src)
@@ -485,7 +472,7 @@ object EventQueries {
     * window (each event lives in exactly 2 windows), keyed on
     * (window, event_type) — the same per-key state shape a production
     * sliding-window stream holds. */
-  def streamHopping(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamHopping(spark: SparkSession, dir: String): DataFrame = {
     val src = streamSourceFixture(spark, dir)
     val agg = spark.readStream.schema(TableLoader.schemaOf(spark, src)).parquet(src)
       .withWatermark("ts", "1 second")

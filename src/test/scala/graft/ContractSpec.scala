@@ -56,6 +56,24 @@ class ContractSpec extends SparkSpec {
     assert(!q2Body.contains("localCheckpoint"))
   }
 
+  test("stream queries swap no session conf; sessions share one codegen classloader") {
+    // State partitions follow spark.sql.shuffle.partitions: no scope
+    // swaps it around a stream start, and no knob overrides it.
+    val offenders = for {
+      p <- Files.walk(repoRoot.resolve("src/main")).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala")
+      (line, i) <- read(p).linesIterator.zipWithIndex
+      if line.contains("withStatePartitions") || line.contains("spark.graft.stream.statePartitions") ||
+        (line.contains("spark.conf.set") && p.getFileName.toString == "EventQueries.scala")
+    } yield s"${repoRoot.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // Artifact isolation off: a stream start's cloned session then keeps
+    // the thread's classloader and hits the shared codegen cache.
+    val session = read(repoRoot.resolve("src/main/scala/graft/GraftSession.scala"))
+    assert(session.contains(""".config("spark.sql.artifact.isolation.enabled", "false")"""))
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+  }
+
   test("the README lists every catalog function") {
     val readme = read(repoRoot.resolve("README.md"))
     val missing = GraftExtensions.functions.map(_._1).filterNot(n => readme.contains(s"`$n("))

@@ -1,6 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.streaming.EventStream
 import graft.queries.EventQueries
 
@@ -133,5 +139,51 @@ class StreamingSpec extends SparkSpec {
     val a = EventQueries.streamingParity(spark, Sf).collect().map(_.toSeq)
     val b = EventQueries.tumblingAgg(spark, Sf).collect().map(_.toSeq)
     assert(a.toSeq === b.toSeq)
+  }
+
+  test("a repeated stream drain commits one state partition per slot and compiles nothing") {
+    // State partitions follow the session's shuffle partitions (no
+    // per-query override), and the second start of the same stream
+    // reuses the first one's generated classes.
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val partitions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name.startsWith("graft_stream_dedup_")) started.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name.startsWith("graft_stream_dedup_"))
+          e.progress.stateOperators.foreach(op => partitions.add(op.numShufflePartitions))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    val compiles = try {
+      val first = EventQueries.streamDedup(spark, Sf).collect().toSeq
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val second = EventQueries.streamDedup(spark, Sf)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(first.nonEmpty && second.collect().toSeq === first)
+      eventually(timeout(60.seconds)) {
+        assert(started.size === 2 && ended.containsAll(started))
+      }
+      compiled
+    } finally spark.streams.removeListener(listener)
+    val slots = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    assert(!partitions.isEmpty)
+    assert(partitions.asScala.forall(_ == slots), partitions.asScala.mkString(", "))
+    assert(compiles === 0)
+  }
+
+  test("a stream drain leaves no checkpoint under a configured location") {
+    val key = "spark.sql.streaming.checkpointLocation"
+    val location = java.nio.file.Files.createTempDirectory("graftckptloc").toFile
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, location.getAbsolutePath)
+    try assert(EventQueries.streamDedup(spark, Sf).count() > 0)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(location.list().isEmpty, location.list().mkString(", "))
   }
 }
