@@ -7,9 +7,9 @@ package graft
   * only the driver can see, a codegen'd expression class missing from
   * the executor classpath) before a real cluster does.
   *
-  * Runs with `spark.graft.checkpoint.reliable=true` so every iterative
-  * operator's per-round pin goes through the reliable-checkpoint path
-  * ([[graft.operators.Pin]]) — exercising exactly the configuration a
+  * Runs with `spark.graft.checkpoint.reliable=true` so every pin goes
+  * through the reliable-checkpoint path ([[graft.operators.Pin]]) —
+  * exercising exactly the configuration a
   * preemptible-executor deployment would use — and with an ISOLATED
   * lake root, so the stored-state builds (PageRank IVM state, IVF/PQ
   * indexes, BM25 postings, minhash bands) execute on the cluster

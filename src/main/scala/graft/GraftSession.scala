@@ -54,20 +54,18 @@ object GraftSession {
     spark
   }
 
-  /** Release the per-session caches of a retiring child session
+  /** Release the per-session cache of a retiring child session
     * (`spark.newSession()` in a long-lived JVM): the memoized
-    * derivations ([[graft.operators.PlanCache]]) and CC label tables
-    * ([[graft.operators.Dedup]]) pin materialized DataFrames keyed by
-    * session, and Spark emits no per-child-session stop event, so the
-    * host must say when one is done. A full SparkContext stop purges
+    * derivations and CC label tables ([[graft.operators.PlanCache]])
+    * pin materialized DataFrames keyed by session, and Spark emits no
+    * per-child-session stop event, so the host must say when one is
+    * done. A full SparkContext stop purges
     * them automatically (listener-driven); this is only for sessions
     * retired UNDER a live context. The trainer caches (k-means
     * centroids, PQ codebooks, PCA models) are deliberately untouched:
     * they hold small plain arrays keyed by plan semantics, reference
     * no session, and their cross-session reuse of deterministic
     * content is the point. */
-  def onSessionEnd(spark: SparkSession): Unit = {
+  def onSessionEnd(spark: SparkSession): Unit =
     graft.operators.PlanCache.onSessionEnd(spark)
-    graft.operators.Dedup.onSessionEnd(spark)
-  }
 }

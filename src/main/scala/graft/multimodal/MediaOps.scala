@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import graft.operators.Pin.PinOps
 
 /** Typed media operations over opaque binary payloads: decode, resize,
   * frame-sample — the operator surface an image/audio/video training
@@ -191,7 +192,7 @@ object MediaOps {
     // without the checkpoint every consumer would re-decode the whole
     // media corpus. The pinned table is 16 bytes/doc.
     val sigs = hashes.select(col("media_id").as("id"), col("phash").as("sig"))
-      .localCheckpoint(false)
+      .pin(false)
     val seg = sigs.select(col("id"), posexplode(array((0 until 8).map { s =>
       shiftrightunsigned(col("sig"), s * 8).bitwiseAND(lit(0xffL))
     }: _*)).as(Seq("seg_idx", "seg")))

@@ -217,85 +217,23 @@ object Dedup {
     * Each round is two equijoin+aggregate passes shuffling (node, node)
     * pairs only — no adjacency lists are ever collected. Output:
     * (id, comp) for every node in `pairs`, comp = component minimum;
-    * survivors are the rows with id == comp. `localCheckpoint`
-    * truncates the iteration lineage; convergence is a fixpoint of the
-    * (edge count, edge fingerprint) pair, one action per round. */
-  /** Per-JVM labeling memo (same contract as the centroid/PQ/merge
-    * caches: deterministic computation, keyed on the analyzed pair
-    * plan's semantic hash, so a different source/filter retrains).
-    * The survivor map, the dedup terminal, and the cluster-size report
-    * all label the SAME pair set — one iterative CC run serves all of
-    * them. The cached value is a materialized (eagerly checkpointed)
-    * label table, small by construction (one row per node in a pair).
+    * survivors are the rows with id == comp. [[Pin]] truncates the
+    * iteration lineage; convergence is a fixpoint of the (edge count,
+    * edge fingerprint) pair, one action per round.
     *
-    * Bounded: an LRU capped at [[CcCacheMax]] entries — the pinned
-    * checkpoint blocks of an evicted (or cleared) entry are released
-    * by Spark's ContextCleaner once the DataFrame is unreferenced, so
-    * a long-lived session labeling many distinct pair plans holds at
-    * most [[CcCacheMax]] label tables, not one per plan ever seen.
-    * Caveat (inherent to localCheckpoint): the blocks are
-    * non-recoverable, so on a cluster an executor loss poisons any
-    * entry whose blocks it held — call [[clearCcCache]] after such a
-    * failure (or before a retry) to force recomputation. */
-  private val CcCacheMax = 8
-  private val ccCache =
-    new java.util.LinkedHashMap[(org.apache.spark.sql.SparkSession, Int), DataFrame](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.SparkSession, Int), DataFrame]): Boolean =
-        size() > CcCacheMax
+    * Memoized in [[PlanCache]] per (session, analyzed pair plan's
+    * semantic hash), so a different source/filter relabels. The
+    * survivor map, the dedup terminal, and the cluster-size report all
+    * label the SAME pair set — one iterative CC run serves all of
+    * them. The entry is a lazily pinned label table, small by
+    * construction (one row per node in a pair): a cache hit reuses the
+    * blocks the first consumer materialized, while a never-again-seen
+    * pair plan (e.g. the incremental fold-in over a checkpointed batch)
+    * pays no extra materialization job for an entry nothing reads. */
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    PlanCache.memo(pairs.sparkSession, s"cc:${pairs.queryExecution.analyzed.semanticHash()}") {
+      connectedComponentsUncached(pairs).pin(false)
     }
-
-  /** Drop all memoized label tables (e.g. after an executor loss
-    * invalidated their non-recoverable localCheckpoint blocks). */
-  def clearCcCache(): Unit = ccCache.synchronized(ccCache.clear())
-
-  private[graft] def ccCacheSize: Int = ccCache.synchronized(ccCache.size())
-
-  private val ccListenerRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  private def ensureCcListener(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sc = spark.sparkContext
-    if (ccListenerRegistered.add(sc))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          ccCache.synchronized {
-            val it = ccCache.keySet.iterator
-            while (it.hasNext) if (it.next()._1.sparkContext eq sc) it.remove()
-          }
-          ccListenerRegistered.remove(sc)
-        }
-      })
-  }
-
-  /** Drop the label tables of ONE retiring child session — same
-    * lifecycle contract as [[PlanCache.onSessionEnd]] (Spark has no
-    * per-child-session stop event, so the host calls this). */
-  def onSessionEnd(spark: org.apache.spark.sql.SparkSession): Unit =
-    ccCache.synchronized {
-      val it = ccCache.keySet.iterator
-      while (it.hasNext) if (it.next()._1 eq spark) it.remove()
-    }
-
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    ensureCcListener(pairs.sparkSession)
-    val key = (pairs.sparkSession, pairs.queryExecution.analyzed.semanticHash())
-    ccCache.synchronized(Option(ccCache.get(key))).getOrElse {
-      // LAZY checkpoint: a cache hit reuses the blocks the first
-      // consumer materialized, while a never-again-seen pair plan
-      // (e.g. the incremental fold-in over a checkpointed batch) pays
-      // no extra materialization job for a cache entry nothing reads.
-      // (Computed outside the lock — an iterative job under a lock
-      // would serialize unrelated callers; a rare duplicate compute
-      // is deterministic and benign.)
-      val labeled = connectedComponentsUncached(pairs).pin(false)
-      ccCache.synchronized {
-        Option(ccCache.get(key)).getOrElse { ccCache.put(key, labeled); labeled }
-      }
-    }
-  }
 
   private def connectedComponentsUncached(pairs: DataFrame): DataFrame = {
     // Materialize the (usually expensive) candidate-pair plan once: the

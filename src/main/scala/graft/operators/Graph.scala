@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Pin.PinOps
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond connected components (see
   * [[Dedup]] for large-star/small-star CC): fixed-point-arithmetic
@@ -35,28 +34,19 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
-  /** The checkpoint-pinned RDD behind a localCheckpointed DataFrame
-    * (its logical plan is a LogicalRDD over the materialized blocks) —
-    * the handle needed to RELEASE those blocks once a later round
-    * supersedes the table. */
-  private def pinnedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
-      case _ => None
-    }
-
   /** The shared iteration prologue: dedup the edge list riding a src
     * repartition (HashPartitioning(src) satisfies the (src, dst)
     * clustering, so the dedup adds no exchange) and persist — the
     * partitioning survives into every round's join. One definition so
     * the shuffle shape cannot drift between the iterative operators. */
   private def srcPartitionedDistinctEdges(edges: DataFrame): DataFrame =
-    distinctEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    distinctEdges(edges).pinPartitioned
 
   /** The UNPINNED distinct src-partitioned edge table — callers that
     * share one edge table across several iterative queries pin this
-    * once (e.g. [[graft.operators.PlanCache.memoPersisted]], which
-    * keeps the HashPartitioning(src) a localCheckpoint would lose) and
+    * once (e.g. in [[graft.operators.PlanCache.memo]] through
+    * `pinPartitioned`, which keeps the HashPartitioning(src) a
+    * checkpoint would lose) and
     * pass it to the `*OnEdges` entry points below. */
   def distinctEdges(edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst"))
@@ -94,9 +84,9 @@ object Graph {
     *         node, damping 0.85 as `150000 + (85 * contribs) div 100`.
     */
   def pageRank(edges: DataFrame, iters: Int): DataFrame = {
-    val e = degreeEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = degreeEdges(edges).pinPartitioned
     val out = pageRankOnDegreed(e, iters)
-    e.unpersist()
+    Pin.release(e)
     out
   }
 
@@ -113,8 +103,6 @@ object Graph {
     // distinct rides the src partitioning (no exchange).
     var ranks = e.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1000000L).as("pr"))
-    // Round r-1's pinned blocks, released as soon as round r lands.
-    var prevPin: Option[org.apache.spark.rdd.RDD[_]] = None
     for (i <- 1 to iters) {
       val next = e.join(ranks.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst"), expr("pr div outdeg").as("contrib"))
@@ -128,9 +116,9 @@ object Graph {
       // released immediately, so no matter how many iterations run,
       // at most TWO rank tables are ever pinned at once (unbounded
       // accumulation was executor storage pressure at high iters).
+      val prev = ranks
       ranks = next.pin(true)
-      prevPin.foreach(_.unpersist(false))
-      prevPin = pinnedRdd(ranks)
+      Pin.release(prev)
     }
     ranks
   }
@@ -154,9 +142,9 @@ object Graph {
     * `pr * w` stays far under 2^63 for any realistic weight scale
     * (pr ~ 1e6-1e9, w ~ multiplicities). */
   def pageRankWeighted(edges: DataFrame, iters: Int): DataFrame = {
-    val e = weightedDegreeEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = weightedDegreeEdges(edges).pinPartitioned
     val out = pageRankWeightedOnEdges(e, iters)
-    e.unpersist()
+    Pin.release(e)
     out
   }
 
@@ -180,16 +168,15 @@ object Graph {
   def pageRankWeightedOnEdges(e: DataFrame, iters: Int): DataFrame = {
     var ranks = e.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1000000L).as("pr"))
-    var prevPin: Option[org.apache.spark.rdd.RDD[_]] = None
     for (_ <- 1 to iters) {
       val next = e.join(ranks.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst"), expr("(pr * w) div sw").as("contrib"))
         .groupBy(col("dst")).agg(sum(col("contrib")).as("contribs"))
         .select(col("dst").as("node"),
           (lit(150000L) + expr("(85L * contribs) div 100L")).as("pr"))
+      val prev = ranks
       ranks = next.pin(true)
-      prevPin.foreach(_.unpersist(false))
-      prevPin = pinnedRdd(ranks)
+      Pin.release(prev) // round r-1's blocks, as soon as round r lands
     }
     ranks
   }
@@ -220,7 +207,7 @@ object Graph {
       ranks = next.select(col("node"), col("pr"))
     }
     val all = (round0 +: rounds.toSeq).reduce(_ unionByName _).pin(true)
-    ed.unpersist()
+    Pin.release(ed)
     all
   }
 
@@ -334,7 +321,7 @@ object Graph {
         .select(lit(r).as("round"), col("node"), col("contribs"), col("pr"))
     }
     val all = roundTables.toSeq.reduce(_ unionByName _).pin(true)
-    ed.unpersist()
+    Pin.release(ed)
     all
   }
 
@@ -418,19 +405,18 @@ object Graph {
       .pin(false) // consumed once per round; released below
     var labels = adj.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var prevPin: Option[org.apache.spark.rdd.RDD[_]] = None
     for (_ <- 1 to rounds) {
+      val prev = labels
       labels = adj.join(labels, col("v") === col("node"))
         .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("u"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("u").as("node"), (-col("m.nl")).as("label"))
         .pin(true)
-      prevPin.foreach(_.unpersist(false))
-      prevPin = pinnedRdd(labels)
+      Pin.release(prev)
     }
     // The adjacency is dead once the final round has materialized.
-    pinnedRdd(adj).foreach(_.unpersist(false))
+    Pin.release(adj)
     labels
   }
 
@@ -464,7 +450,7 @@ object Graph {
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     val ed = srcPartitionedDistinctEdges(edges)
     val out = bfsDistancesOnEdges(ed, seeds, maxDepth)
-    ed.unpersist()
+    Pin.release(ed)
     out
   }
 
@@ -498,7 +484,7 @@ object Graph {
     // same leave-nothing-behind discipline as the other iterative
     // operators here.
     val out = levels.reduce(_ unionByName _).pin(true)
-    frontiers.foreach(f => pinnedRdd(f).foreach(_.unpersist(false)))
+    frontiers.foreach(Pin.release)
     out
   }
 
@@ -546,12 +532,9 @@ object Graph {
                    deltaEdges: DataFrame, maxDepth: Int): DataFrame = {
     val ed = srcPartitionedDistinctEdges(fullEdges)
     val dEff = deltaEdges.select(col("src"), col("dst")).distinct().pin(true)
+    // The initial stored pin only survives until the first merge (or
+    // the caller owns it, if no round improves anything).
     var dist = stored.select(col("node"), col("dist")).pin(false)
-    // Released in the epilogue: dEff feeds only the seeding join, the
-    // initial stored pin only survives until the first merge (or the
-    // final one, if no round improves anything).
-    val seedPins = Seq(pinnedRdd(dEff), pinnedRdd(dist)).flatten
-    var prevPin: Option[org.apache.spark.rdd.RDD[_]] = None
     // Seeding: relax every delta edge once from the stored distances.
     var improved = dEff
       .join(dist.select(col("node").as("fn"), col("dist").as("fd")).hint("shuffle_hash"),
@@ -563,7 +546,6 @@ object Graph {
       .where(col("od").isNull || col("nd") < col("od"))
       .select(col("node"), col("nd"))
       .pin(true)
-    var improvedPin = pinnedRdd(improved)
     var rounds = 0
     while (rounds < maxDepth && !improved.isEmpty) {
       rounds += 1
@@ -571,8 +553,7 @@ object Graph {
         .join(improved.withColumnRenamed("nd", "imp"), Seq("node"), "full_outer")
         .select(col("node"), least(col("dist"), col("imp")).as("dist"))
         .pin(true)
-      prevPin.foreach(_.unpersist(false))
-      prevPin = pinnedRdd(next)
+      Pin.release(dist)
       dist = next
       val cand = ed
         .join(improved.select(col("node").as("fn"), col("nd").as("fd")).hint("shuffle_hash"),
@@ -585,8 +566,7 @@ object Graph {
         .where(col("od").isNull || col("nd") < col("od"))
         .select(col("node"), col("nd"))
         .pin(true)
-      improvedPin.foreach(_.unpersist(false))
-      improvedPin = pinnedRdd(nextImproved)
+      Pin.release(improved)
       improved = nextImproved
     }
     // The loop can only exit with an EMPTY improvement set: round-r
@@ -594,11 +574,7 @@ object Graph {
     // adds 1), so round maxDepth's candidates all fail the
     // nd <= maxDepth filter — `dist` IS the fixpoint. Transfer its
     // pin to the caller and release every other pin this call made.
-    val outPin = pinnedRdd(dist)
-    (seedPins ++ prevPin ++ improvedPin)
-      .filterNot(r => outPin.exists(_ eq r))
-      .foreach(_.unpersist(false))
-    ed.unpersist()
+    Seq(dEff, improved, ed).foreach(Pin.release)
     dist
   }
 
@@ -609,7 +585,7 @@ object Graph {
     * the cheapest parallel edge can ever lie on a shortest path, so the
     * collapse is semantics-preserving and shrinks every round's probe. */
   private def srcPartitionedMinWeightEdges(edges: DataFrame): DataFrame =
-    minWeightEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    minWeightEdges(edges).pinPartitioned
 
   /** The UNPINNED min-weight iteration edge table — the weighted
     * sibling of [[distinctEdges]] for callers that pin it themselves
@@ -660,7 +636,7 @@ object Graph {
   def ssspDistances(edges: DataFrame, seeds: DataFrame, maxCost: Long): DataFrame = {
     val ed = srcPartitionedMinWeightEdges(edges)
     val out = ssspDistancesOnEdges(ed, seeds, maxCost)
-    ed.unpersist()
+    Pin.release(ed)
     out
   }
 
@@ -715,11 +691,7 @@ object Graph {
       .select(col("node"), col("nd").as("dist"))
       .pin(true)
     val out = relaxToFixpoint(ed, dist0, improved0, maxCost)
-    val outPin = pinnedRdd(out)
-    (pinnedRdd(dEff) ++ pinnedRdd(improved0))
-      .filterNot(r => outPin.exists(_ eq r))
-      .foreach(_.unpersist(false))
-    ed.unpersist()
+    Seq(dEff, ed).foreach(Pin.release)
     out
   }
 
@@ -728,17 +700,15 @@ object Graph {
     * stationary edges from it, keep only candidates strictly better
     * than the merged table, repeat. `maxCost + 1` rounds are always
     * enough (see [[ssspDistances]]); the loop exits the round
-    * improvements drain, releasing every superseded pin as it goes and
-    * transferring only the fixpoint's pin to the caller. `dist0` and
-    * `improved0` may be the SAME pinned table (the from-scratch
-    * seeding) — the epilogue releases by identity, never twice. */
+    * improvements drain, releasing every superseded pin (`dist0` and
+    * `improved0` included) as it goes and transferring only the
+    * fixpoint's pin to the caller. `dist0` and `improved0` may be the
+    * SAME pinned table (the from-scratch seeding): it is kept until
+    * both roles are superseded, and returned if no round runs. */
   private def relaxToFixpoint(ed: DataFrame, dist0: DataFrame,
                               improved0: DataFrame, maxCost: Long): DataFrame = {
     var dist = dist0
     var improved = improved0
-    val seedPins = (pinnedRdd(dist0) ++ pinnedRdd(improved0)).toSeq
-    var distPin: Option[org.apache.spark.rdd.RDD[_]] = None
-    var improvedPin: Option[org.apache.spark.rdd.RDD[_]] = None
     var rounds = 0L
     while (rounds <= maxCost && !improved.isEmpty) {
       rounds += 1
@@ -746,8 +716,7 @@ object Graph {
         .join(improved.withColumnRenamed("dist", "imp"), Seq("node"), "full_outer")
         .select(col("node"), least(col("dist"), col("imp")).as("dist"))
         .pin(true)
-      distPin.foreach(_.unpersist(false))
-      distPin = pinnedRdd(merged)
+      if (!(dist eq improved)) Pin.release(dist)
       dist = merged
       val nextImproved = ed
         .join(improved.select(col("node").as("fn"), col("dist").as("fd")).hint("shuffle_hash"),
@@ -759,14 +728,10 @@ object Graph {
         .where(col("od").isNull || col("nd") < col("od"))
         .select(col("node"), col("nd").as("dist"))
         .pin(true)
-      improvedPin.foreach(r => if (!seedPins.exists(_ eq r)) r.unpersist(false))
-      improvedPin = pinnedRdd(nextImproved)
+      Pin.release(improved)
       improved = nextImproved
     }
-    val outPin = pinnedRdd(dist)
-    (seedPins ++ improvedPin)
-      .filterNot(r => outPin.exists(_ eq r))
-      .foreach(_.unpersist(false))
+    if (!(improved eq dist)) Pin.release(improved)
     dist
   }
 }

@@ -2,19 +2,25 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped memoizer for derived tables shared across queries —
-  * the generalization of the CC label cache
-  * ([[Dedup.connectedComponents]]): a named derivation is built once,
-  * pinned via lazy `localCheckpoint`, and every later consumer in the
-  * same session reuses the materialized blocks instead of re-deriving
-  * (the graph family alone repeated ~3-4 s of shared edge derivation
-  * per query at sf0.1 before this).
+/** Session-scoped memoizer for derived tables shared across queries:
+  * a named derivation is built and pinned once, and every later
+  * consumer in the same session reuses the materialized blocks instead
+  * of re-deriving (the graph family alone repeated ~3-4 s of shared
+  * edge derivation per query at sf0.1 before this). It is graft's only
+  * DataFrame memo: query families and the CC label tables of
+  * [[Dedup.connectedComponents]] share it.
   *
-  * Contract mirrors ccCache: LRU capped at [[Max]] entries so a
-  * long-lived session holds a bounded number of pinned tables (evicted
-  * entries' blocks are released by the ContextCleaner once
-  * unreferenced), and `localCheckpoint` blocks are non-recoverable —
-  * after an executor loss call [[clear]] to force recomputation.
+  * The caller pins what it stores, through [[Pin]]: `.pin(false)` (a
+  * lazy checkpoint, local or reliable per `spark.graft.checkpoint.reliable`)
+  * or `.pinPartitioned` for edge tables whose partitioning the
+  * consumers' joins need. The cache releases every entry it drops
+  * through [[Pin.release]]: on LRU eviction past [[Max]] entries, on
+  * [[onSessionEnd]] and on [[clear]] — a persisted entry's blocks are
+  * keyed by PLAN in the shared CacheManager, so dropping the map
+  * reference alone would leak them until the context stops. So hold a
+  * memoized frame only for the query that asked for it: once its entry
+  * is dropped, a local checkpoint's blocks are gone. After an executor
+  * loss under local checkpoints, call [[clear]] to force recomputation.
   *
   * Lifecycle: entries die with their session, not only under LRU
   * pressure. A stopped SparkContext purges every entry of its sessions
@@ -24,26 +30,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * that purge is necessarily explicit.
   */
 object PlanCache {
-  // Must exceed the number of memoized derivation families a one-dir
-  // session touches — one per PlanCache.memo/memoPersisted call site
-  // under queries/ (grep recounts them; 11 as of this note). At the
-  // cap, one more key would evict-thrash every query.
-  private val Max = 16
+  // Label tables of up to this many distinct CC pair plans per session.
+  private[graft] val CcTables = 8
+  // One entry per PlanCache.memo call site under queries/ (14, each
+  // keyed on one dir; ContractSpec keeps the count below 16) plus the
+  // CC label tables. At the cap, one more key would evict-thrash every
+  // query.
+  private[graft] val Max = 16 + CcTables
   private val cache =
     new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
         val evict = this.size() > Max
-        // A persisted entry's cached blocks are keyed by PLAN in the
-        // session's CacheManager — dropping the map reference alone
-        // would leak them until session end.
-        if (evict) unpersistQuietly(e.getValue)
+        if (evict) Pin.release(e.getValue)
         evict
       }
     }
-
-  private def unpersistQuietly(df: DataFrame): Unit =
-    try { df.unpersist(false); () } catch { case _: Throwable => () }
 
   private val listenerRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
@@ -66,51 +68,33 @@ object PlanCache {
     cache.synchronized {
       val it = cache.keySet.iterator
       while (it.hasNext) if (it.next()._1.sparkContext eq sc) it.remove()
-      // No unpersist here: the context is stopping, its blocks die with it.
+      // No release here: the context is stopping, its blocks die with it.
     }
 
-  /** Drop every entry of ONE session — for a long-lived context that
-    * retires short-lived child sessions (`spark.newSession()`): Spark
-    * has no per-child-session stop event, so the host must say when a
-    * session is done or its pinned tables linger until LRU pressure. */
+  /** Drop and release every entry of ONE session — for a long-lived
+    * context that retires short-lived child sessions
+    * (`spark.newSession()`): Spark has no per-child-session stop event,
+    * so the host must say when a session is done or its pinned tables
+    * linger until LRU pressure. */
   def onSessionEnd(spark: SparkSession): Unit = cache.synchronized {
     val it = cache.entrySet().iterator
     while (it.hasNext) {
       val e = it.next()
-      if (e.getKey._1 eq spark) { unpersistQuietly(e.getValue); it.remove() }
+      if (e.getKey._1 eq spark) { Pin.release(e.getValue); it.remove() }
     }
   }
 
-  /** Memoized build of a named derivation. Lazy checkpoint: the first
-    * ACTION materializes the blocks; a plan cached but never executed
-    * costs nothing. Built outside the lock (duplicate compute on a
-    * race is deterministic and benign; holding the lock across a Spark
-    * job would serialize unrelated callers). */
+  /** Memoized build of a named derivation; `build` returns the frame
+    * already pinned (see the object doc). A lazy pin costs nothing
+    * until the first ACTION materializes its blocks. Built outside the
+    * lock (duplicate compute on a race is deterministic and benign;
+    * holding the lock across a Spark job would serialize unrelated
+    * callers). */
   def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     ensureListener(spark)
     val k = (spark, key)
     cache.synchronized(Option(cache.get(k))).getOrElse {
-      val built = build.localCheckpoint(false)
-      cache.synchronized {
-        Option(cache.get(k)).getOrElse { cache.put(k, built); built }
-      }
-    }
-  }
-
-  /** [[memo]] that pins with `.persist` (MEMORY_AND_DISK) instead of
-    * `localCheckpoint` — for derivations whose OUTPUT PARTITIONING is
-    * the point (iteration edge tables hash-partitioned on the join
-    * key): a localCheckpointed LogicalRDD reports UnknownPartitioning,
-    * so every consumer would re-exchange the table, while a cached
-    * InMemoryRelation keeps the partitioning (AQE leaves cached-plan
-    * output partitioning alone by default —
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`).
-    * Entries unpersist on LRU eviction and session purge. */
-  def memoPersisted(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    ensureListener(spark)
-    val k = (spark, key)
-    cache.synchronized(Option(cache.get(k))).getOrElse {
-      val built = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val built = build
       cache.synchronized {
         Option(cache.get(k)).getOrElse { cache.put(k, built); built }
       }
@@ -146,9 +130,12 @@ object PlanCache {
     scalarMemo(df, "count")(df.count())
   }
 
-  /** Drop every memoized derivation (e.g. after an executor loss
-    * invalidated the non-recoverable checkpoint blocks). */
-  def clear(): Unit = cache.synchronized(cache.clear())
+  /** Drop and release every memoized derivation (e.g. after an
+    * executor loss invalidated the non-recoverable checkpoint blocks). */
+  def clear(): Unit = cache.synchronized {
+    cache.values.forEach(df => Pin.release(df))
+    cache.clear()
+  }
 
   private[graft] def size: Int = cache.synchronized(cache.size())
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Pin.PinOps
 
 /** Window/time-series operators: the analytics surface a ratings lake
   * exists for (leaderboards, month-over-month progress) plus event
@@ -117,7 +118,7 @@ object Windows {
     * is the same width Spark itself would give any exchange over this
     * input, known without touching the plan.
     *
-    * The range-partitioned frame is materialized via a lazy local
+    * The range-partitioned frame is materialized via a lazy [[Pin]]
     * checkpoint before fanning out to the rank and size consumers:
     * RangePartitioner samples its boundaries with an rdd.id-seeded
     * seed, so two physical executions of the same range exchange (plan
@@ -132,7 +133,7 @@ object Windows {
         df.sparkSession.sessionState.conf.numShufflePartitions, 1), 4096)
     val ranged = df.repartitionByRange(width, order: _*)
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(false)
+      .pin(false)
     val wp = Window.partitionBy(col("_pid")).orderBy(order: _*)
     val ranked = ranged.withColumn("_lrank", row_number().over(wp).cast("long"))
     val sizes = ranged.groupBy(col("_pid")).agg(count(lit(1)).as("_n"))

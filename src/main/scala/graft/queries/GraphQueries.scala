@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Pin.PinOps
 import graft.operators.Graph
 import graft.sources.TableLoader
 
@@ -48,20 +49,20 @@ object GraphQueries {
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
       raw.select(col("c").as("src"), col("s").as("dst"))
-        .unionAll(raw.select(col("s").as("src"), col("c").as("dst")))
+        .unionAll(raw.select(col("s").as("src"), col("c").as("dst"))).pin(false)
     }
 
   /** The degree-annotated PageRank edge table ([[Graph.degreeEdges]]),
-    * memoized PERSISTED per (session, dir): persistence (not a
-    * localCheckpoint) is what carries HashPartitioning(src) into every
+    * memoized PERSISTED per (session, dir): `pinPartitioned` (not a
+    * checkpoint) is what carries HashPartitioning(src) into every
     * consumer, so per-round joins never re-shuffle the edges — and the
     * one-shuffle dedup + degree join runs once per session instead of
     * once per query call (it was ~25-35% of every graph query's warm
     * time at sf0.1; the BFS traversal projects (src, dst) off the same
     * table, partitioning intact). */
   private def degreedPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memoPersisted(spark, s"graph:pe-degreed:$dir") {
-      Graph.degreeEdges(purchaseEdges(spark, dir))
+    graft.operators.PlanCache.memo(spark, s"graph:pe-degreed:$dir") {
+      Graph.degreeEdges(purchaseEdges(spark, dir)).pinPartitioned
     }
 
   def qPageRank(spark: SparkSession, dir: String): DataFrame = {
@@ -95,8 +96,8 @@ object GraphQueries {
     * sum to the multiplicity), memoized persisted for the same
     * partitioning-and-once-per-session reasons. */
   private def weightedDegreedPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memoPersisted(spark, s"graph:pe-wdegreed:$dir") {
-      Graph.weightedDegreeEdges(purchaseEdges(spark, dir).withColumn("w", lit(1L)))
+    graft.operators.PlanCache.memo(spark, s"graph:pe-wdegreed:$dir") {
+      Graph.weightedDegreeEdges(purchaseEdges(spark, dir).withColumn("w", lit(1L))).pinPartitioned
     }
 
   def qPageRankWeighted(spark: SparkSession, dir: String): DataFrame = {
@@ -301,7 +302,7 @@ object GraphQueries {
         case None => edgesOf(s, batch)
         case Some(p) =>
           // Pinned: feeds the Bloom build AND the anti-join.
-          val batchE = edgesOf(s, batch).localCheckpoint(false)
+          val batchE = edgesOf(s, batch).pin(false)
           // Pre-prune the stored-edge build side to ~batch size:
           // xxhash64(src, dst) is a sound Bloom key for the
           // (src, dst) pair (equal pairs hash equal — no false
@@ -384,7 +385,7 @@ object GraphQueries {
             case None =>
               val p = if (VersionedTable.versions(s, edgesRoot).isEmpty) None
                 else Some(VersionedTable.readAll(s, edgesRoot))
-              val d = landDelta(s, batch, p).localCheckpoint(false)
+              val d = landDelta(s, batch, p).pin(false)
               VersionedTable.commit(d, edgesRoot, markers = Seq(marker))
               (d, p)
           }
@@ -455,7 +456,7 @@ object GraphQueries {
     * instead of re-running the two shuffles and the window. */
   private def coSupplierEdges(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PlanCache.memo(spark, s"graph:co-supplier-edges:$dir") {
-      coSupplierEdgesUncached(spark, dir)
+      coSupplierEdgesUncached(spark, dir).pin(false)
     }
 
   private def coSupplierEdgesUncached(spark: SparkSession, dir: String): DataFrame = {
@@ -608,7 +609,7 @@ object GraphQueries {
     * SSSP variants consume this one table. */
   private def weightedPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PlanCache.memo(spark, s"graph:purchase-wedges:$dir") {
-      symWeightedPairs(spark, dir, lit(true))
+      symWeightedPairs(spark, dir, lit(true)).pin(false)
     }
 
   /** Cheapest weighted route from the nation-0 customer market to
@@ -638,8 +639,8 @@ object GraphQueries {
     * partitioning-and-once-per-session contract as
     * [[degreedPurchaseEdges]]. */
   private def minWeightPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memoPersisted(spark, s"graph:pe-minw:$dir") {
-      Graph.minWeightEdges(weightedPurchaseEdges(spark, dir))
+    graft.operators.PlanCache.memo(spark, s"graph:pe-minw:$dir") {
+      Graph.minWeightEdges(weightedPurchaseEdges(spark, dir)).pinPartitioned
     }
 
   /** INCREMENTALLY-MAINTAINED weighted shortest paths — the SSSP

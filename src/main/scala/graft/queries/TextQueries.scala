@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
+import graft.operators.Pin.PinOps
 import graft.functions.TextFunctions._
 import graft.expressions.ShingleHashes.shingleHashesNative
 import graft.operators.Dedup
@@ -27,7 +28,7 @@ object TextQueries {
     * design, not a shortcut. */
   private[graft] def termsTable(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PlanCache.memo(spark, s"text:terms:$dir") {
-      docs(spark, dir).select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      docs(spark, dir).select(col("doc_id"), explode(split(col("text"), " ")).as("term")).pin(false)
     }
 
   def langIdQ(spark: SparkSession, dir: String): DataFrame = {
@@ -610,7 +611,7 @@ object TextQueries {
     val dup = grams.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= 2).select(col("h"))
     val dupStarts = grams.join(dup, "h").select(col("doc_id"), col("s"))
-      .localCheckpoint(false) // feeds coverage AND the per-doc dup count
+      .pin(false) // feeds coverage AND the per-doc dup count
     val cover = dupStarts
       .select(col("doc_id"), explode(sequence(col("s"), col("s") + (k - 1))).as("pos"))
       .distinct()
@@ -701,7 +702,7 @@ object TextQueries {
     val dupStarts = cand
       .withColumn("c2", count(lit(1)).over(W.partitionBy(col("g"))))
       .where(col("c2") >= 2).select(col("doc_id"), col("s"))
-      .localCheckpoint(false) // feeds interval merge AND the dup count
+      .pin(false) // feeds interval merge AND the dup count
     val wS = W.partitionBy(col("doc_id")).orderBy(col("s"))
     val merged = dupStarts
       .withColumn("pme", max(col("s") + (L - 1))
@@ -736,7 +737,7 @@ object TextQueries {
     * corpus-sized text, small next to the derivation it saves). */
   private def charDedupFullTable(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PlanCache.memo(spark, s"text:char-dedup-full:$dir") {
-      charDedupSpansFull(docs(spark, dir), L = 40)
+      charDedupSpansFull(docs(spark, dir), L = 40).pin(false)
     }
 
   /** Driver entry: char-level exact-substring dedup of the documents
@@ -945,10 +946,10 @@ object TextQueries {
     * cluster sizes, stats, incremental survivors), so the prefix-
     * filtered candidate join + exact verify runs once per session and
     * every later consumer reuses the pinned blocks — the CC labeling
-    * on top is additionally memoized per pair plan by the ccCache. */
+    * on top is additionally memoized per pair plan in PlanCache. */
   private def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PlanCache.memo(spark, s"dedup:jaccard-pairs:$dir") {
-      Dedup.ngramJaccardPairs(docs(spark, dir), tauBp = 6000L)
+      Dedup.ngramJaccardPairs(docs(spark, dir), tauBp = 6000L).pin(false)
     }
 
   /** Near-dup cluster-size histogram: how many duplicate clusters of
@@ -1264,7 +1265,7 @@ object TextQueries {
     * bounded jobs (Bpe.trainVocab regime); no SQL engine trains a
     * model, so the driver records rows-only. */
   def qualityClassifierQ(spark: SparkSession, dir: String): DataFrame = {
-    val raw = qualityFeatures(docs(spark, dir)).localCheckpoint(true)
+    val raw = qualityFeatures(docs(spark, dir)).pin(true)
     val (f, _) = graft.operators.QualityModel.standardize(raw, QualityFeatCols)
     val w = graft.operators.QualityModel.train(f, QualityFeatCols, "y", lr = 2.0, steps = 25)
     graft.operators.QualityModel.score(f, QualityFeatCols, w)
@@ -1332,7 +1333,7 @@ object TextQueries {
     }
 
     def trainOn(slice: DataFrame): (Array[Double], Array[(Double, Double)]) = {
-      val raw = qualityFeatures(slice).localCheckpoint(true)
+      val raw = qualityFeatures(slice).pin(true)
       val (f, stats) = graft.operators.QualityModel.standardize(raw, QualityFeatCols)
       val w = graft.operators.QualityModel.train(f, QualityFeatCols, "y", lr = 2.0, steps = 25)
       (w, stats)

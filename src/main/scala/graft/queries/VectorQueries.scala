@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Pin.PinOps
 import graft.functions.VectorFunctions._
 import graft.expressions.FloatVecDot.vecDot
 import graft.operators.Similarity
@@ -119,6 +120,7 @@ object VectorQueries {
       val all = emb(spark, dir)
       Similarity.bruteForceTopK(all.where(col("vec_id") % 100 === 0), all, k = 20)
         .select(col("q_id"), col("n_id").as("doc_id"), col("rnk").cast("long").as("vec_rnk"))
+        .pin(false)
     }
 
   def retrievalRrfQ(spark: SparkSession, dir: String): DataFrame = {
@@ -300,7 +302,7 @@ object VectorQueries {
     // layer reads these rows from the lake anyway.
     val codes = Similarity.pqEncodeTable(all.where(col("vec_id") % 2 === 0), books)
       .unionAll(Similarity.pqEncodeTable(all.where(col("vec_id") % 2 =!= 0), books))
-      .localCheckpoint(false)
+      .pin(false)
     Similarity.pqTopKStored(all.where(col("vec_id") % 100 === 0), codes, books, all, k = 10)
       .orderBy(col("q_id"), col("rnk"))
   }
@@ -551,7 +553,7 @@ object VectorQueries {
   private def videoFramesTable(spark: SparkSession, dir: String): DataFrame =
     graft.operators.PlanCache.memo(spark, s"mm:video-frames:$dir") {
       val media = Multimodal.syntheticAvis(spark, TableLoader.load(spark, dir, "documents"))
-      graft.multimodal.MediaOps.videoFrames(media).toDF()
+      graft.multimodal.MediaOps.videoFrames(media).toDF().pin(false)
     }
 
   def mmVideoFrames(spark: SparkSession, dir: String): DataFrame =
@@ -595,7 +597,7 @@ object VectorQueries {
   private def imageMediaTable(spark: SparkSession, dir: String) = {
     import spark.implicits._
     graft.operators.PlanCache.memo(spark, s"mm:png-media:$dir") {
-      Multimodal.syntheticImages(spark, TableLoader.load(spark, dir, "documents")).toDF()
+      Multimodal.syntheticImages(spark, TableLoader.load(spark, dir, "documents")).toDF().pin(false)
     }.as[Multimodal.MediaRow]
   }
 
@@ -633,7 +635,7 @@ object VectorQueries {
       val media = Multimodal.syntheticPatternImages(
         spark, TableLoader.load(spark, dir, "documents"))
       val hashes = graft.multimodal.MediaOps.imageDHash(media).toDF()
-      graft.multimodal.MediaOps.phashPairs(hashes, maxDist = 6)
+      graft.multimodal.MediaOps.phashPairs(hashes, maxDist = 6).pin(false)
     }
 
   def mmPhashDedup(spark: SparkSession, dir: String): DataFrame =
@@ -680,7 +682,7 @@ object VectorQueries {
       val media = Multimodal.syntheticPatternWavs(
         spark, TableLoader.load(spark, dir, "documents"))
       val hashes = graft.multimodal.MediaOps.audioFingerprint(media).toDF()
-      graft.multimodal.MediaOps.phashPairs(hashes, maxDist = 6)
+      graft.multimodal.MediaOps.phashPairs(hashes, maxDist = 6).pin(false)
     }
 
   def mmAudioFpDedup(spark: SparkSession, dir: String): DataFrame =

@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.operators.Pin
+import graft.operators.Pin.PinOps
 
 /** Small-files compaction for a partitioned parquet lake.
   *
@@ -16,8 +18,11 @@ import org.apache.spark.sql.SparkSession
   * UpsertWriter).
   *
   * The rewrite is self-overwriting, so the partition's rows are
-  * materialized (localCheckpoint) BEFORE the overwrite severs them from
-  * the source files — bounded by one partition's data by construction.
+  * materialized (an eager [[graft.operators.Pin]]) BEFORE the overwrite
+  * severs them from the source files — bounded by one partition's data
+  * by construction. Under `spark.graft.checkpoint.reliable=true` that
+  * snapshot is a reliable checkpoint, so an executor lost during the
+  * write cannot take the partition's only copy with it.
   * Swap-via-rename is no safer on object stores (rename is not atomic
   * there either) and costs a second copy.
   */
@@ -55,9 +60,10 @@ object Compactor {
     if (files.length <= targetFiles)
       return CompactionResult(dir, files.length, files.length, bytes, compacted = false)
     // Materialize before overwriting the files being read.
-    val df = spark.read.parquet(dir).localCheckpoint(true)
+    val df = spark.read.parquet(dir).pin(true)
     df.repartition(targetFiles).write
       .mode("overwrite").option("compression", codec).parquet(dir)
+    Pin.release(df)
     val after = f.listStatus(new Path(dir))
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
     CompactionResult(dir, files.length, after, bytes, compacted = true)

@@ -74,6 +74,31 @@ class ContractSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
   }
 
+  test("Pin is the only materialization site; PlanCache is the only DataFrame memo") {
+    // Every pin follows spark.graft.checkpoint.reliable only if it goes
+    // through Pin; a second memo would be a second LRU and lifecycle.
+    val raw = Seq("localCheckpoint(", ".checkpoint(", ".persist(", ".unpersist(")
+    val offenders = for {
+      p <- Files.walk(repoRoot.resolve("src/main")).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala")
+      (line, i) <- read(p).linesIterator.zipWithIndex
+      if (p.getFileName.toString != "Pin.scala" && raw.exists(line.contains)) ||
+        line.contains("memoPersisted") || line.contains("ccCache")
+    } yield s"${repoRoot.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("PlanCache.Max holds every memoized query family plus the CC label tables") {
+    // One entry per memo call site (each keyed on one dir): a session
+    // that touches them all must not evict-thrash its CC label tables.
+    val sites = Files.walk(repoRoot.resolve("src/main/scala/graft/queries")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => """PlanCache\.memo\(""".r.findAllIn(read(p)).size).sum
+    assert(sites > 0)
+    assert(sites < graft.operators.PlanCache.Max - graft.operators.PlanCache.CcTables,
+      s"$sites PlanCache.memo sites under queries/: raise PlanCache.Max")
+  }
+
   test("the README lists every catalog function") {
     val readme = read(repoRoot.resolve("README.md"))
     val missing = GraftExtensions.functions.map(_._1).filterNot(n => readme.contains(s"`$n("))

@@ -365,12 +365,14 @@ class GraphSpec extends SparkSpec {
     minw.unpersist()
   }
 
-  test("memoPersisted keeps the hash partitioning a localCheckpoint would lose") {
+  test("a pinPartitioned memo keeps the hash partitioning a checkpoint would lose") {
     import graft.operators.PlanCache
-    val key = s"spec:memo-persisted:${java.util.UUID.randomUUID}"
-    val prep = PlanCache.memoPersisted(spark, key) {
+    import graft.operators.Pin.PinOps
+    val key = s"spec:memo-partitioned:${java.util.UUID.randomUUID}"
+    val prep = PlanCache.memo(spark, key) {
       Graph.degreeEdges(
         spark.range(1000).select((col("id") % 50).as("src"), (col("id") % 37).as("dst")))
+        .pinPartitioned
     }
     prep.count() // materialize the cache
     // A join keyed on src must not ADD an exchange on the edge side:

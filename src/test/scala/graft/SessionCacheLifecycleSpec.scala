@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.operators.{Dedup, PlanCache}
 
-/** Pins the session lifecycle of the DataFrame-pinning caches: a
+/** Pins the session lifecycle of the DataFrame-pinning cache: a
   * retired child session's entries are purged (explicitly via
   * onSessionEnd — Spark has no per-child-session stop event) while a
   * live session's entries survive, and the context-stop listener path
@@ -39,7 +40,7 @@ class SessionCacheLifecycleSpec extends SparkSpec {
   }
 
   test("onSessionEnd purges the retired session's CC label tables; live survive") {
-    Dedup.clearCcCache()
+    PlanCache.clear()
     val s2 = spark.newSession()
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
@@ -49,13 +50,28 @@ class SessionCacheLifecycleSpec extends SparkSpec {
     }
     Dedup.connectedComponents(pairs).count()
     Dedup.connectedComponents(pairs2).count()
-    assert(Dedup.ccCacheSize === 2)
+    assert(PlanCache.size === 2)
     GraftSession.onSessionEnd(s2)
-    assert(Dedup.ccCacheSize === 1)
+    assert(PlanCache.size === 1)
     // live session's entry still present (memo hit leaves size at 1)
     Dedup.connectedComponents(pairs).count()
-    assert(Dedup.ccCacheSize === 1)
-    Dedup.clearCcCache()
+    assert(PlanCache.size === 1)
+    PlanCache.clear()
+  }
+
+  test("clear releases a persisted entry's cached blocks") {
+    import graft.operators.Pin.PinOps
+    PlanCache.clear()
+    val df = PlanCache.memo(spark, "lifecycle:persisted") {
+      spark.range(137).toDF("lifecycle_clear").pinPartitioned
+    }
+    df.count()
+    assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    // The CacheManager is shared by every session of the context: an
+    // entry dropped without a release would hold its blocks until the
+    // context stops.
+    PlanCache.clear()
+    assert(df.storageLevel === StorageLevel.NONE)
   }
 
   test("a retired child session that used every Column builder is collectable") {

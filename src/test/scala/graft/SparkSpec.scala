@@ -19,4 +19,17 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A child session whose pins are reliable checkpoints. The
+    * checkpoint dir is set once per SparkContext, by the first reliable
+    * pin, so every spec shares this one. */
+  def reliableSession(): SparkSession = {
+    val s = session.newSession()
+    s.conf.set("spark.graft.checkpoint.reliable", "true")
+    s.conf.set("spark.graft.checkpoint.dir", checkpointDir)
+    s
+  }
+
+  private lazy val checkpointDir =
+    java.nio.file.Files.createTempDirectory("graft-checkpoints").toString
 }
