@@ -16,7 +16,8 @@ package graft
   * rather than serving driver-built fixtures.
   *
   * Writes `CLUSTER_SMOKE_r{N}.json` (round from args or "X") with
-  * per-query wall seconds, row counts, and any failure messages.
+  * per-query wall seconds of build + full-output digest, the digest's
+  * `rows` and `hash`, and any failure's exception class and message.
   *
   * Usage: SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 sbt -batch
   * "runMain graft.ClusterSmoke /root/testdata/sf0.001
@@ -76,39 +77,24 @@ object ClusterSmoke {
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Full JSON string escape incl. control chars — Spark exception
-    // messages routinely carry newlines (plan dumps, stage failures),
-    // and one unescaped \n in an err field invalidates the artifact.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Each query is timed through QueryRun: a pruned count() would never
+    // run the pruned columns' expressions on the executors, and those are
+    // where a driver-local assumption hides.
     val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val r =
-        try {
-          val n = fn(spark, sfDir).count()
-          s"""{"sec":${"%.2f".formatLocal(java.util.Locale.ROOT,
-            (System.nanoTime() - t0) / 1e9)},"rows":$n,"ok":true}"""
-        } catch {
-          case e: Throwable =>
-            s"""{"sec":${"%.2f".formatLocal(java.util.Locale.ROOT,
-              (System.nanoTime() - t0) / 1e9)},"ok":false,"err":${q(
-              String.valueOf(e.getMessage).take(300))}}"""
-        }
+      val o = QueryRun.run(spark, SparkEntry.queries(name), sfDir)
+      val sec = "%.2f".formatLocal(java.util.Locale.ROOT, o.sec)
+      val r = o.result match {
+        case Right((rows, hash)) => s"""{"sec":$sec,"rows":$rows,"hash":$hash,"ok":true}"""
+        case Left(e) => s"""{"sec":$sec,"ok":false,"error":${Json.str(e.getClass.getName)},""" +
+          s""""err":${Json.str(String.valueOf(e.getMessage).take(300))}}"""
+      }
       println(s"[smoke] $name -> $r")
-      q(name) + ":" + r
+      Json.str(name) + ":" + r
     }
     val payload =
-      s"""{"master":"local-cluster[2,4,2048]","sf":${q(sfDir)},""" +
+      s"""{"master":"local-cluster[2,4,2048]","sf":${Json.str(sfDir)},""" +
         s""""reliable_checkpoint":true,"isolated_lake":true,""" +
-        s""""mode":${q(if (full) "full-surface" else "targeted")},""" +
+        s""""mode":${Json.str(if (full) "full-surface" else "targeted")},""" +
         s""""n_queries":${names.size},""" +
         s""""queries":{${results.mkString(",")}}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), payload + "\n")

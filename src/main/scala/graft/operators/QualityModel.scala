@@ -37,8 +37,7 @@ object QualityModel {
     * construction: the gradient sums are order-independent fixed-point
     * longs. Set/restore mutates the shared session conf, so training
     * must not run concurrently with other queries of the same session
-    * (the sequential Verify/Bench drive shape — same caveat as the
-    * streaming state-partition scope in EventQueries). */
+    * (the sequential Verify/Bench drive shape). */
   private def withoutAqe[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)

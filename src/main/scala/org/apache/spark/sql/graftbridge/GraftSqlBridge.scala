@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset, S
 
 /** Minimal bridge to the two `private[sql]` seams an external
   * whole-operator library needs: Column -> Catalyst Expression, and
-  * LogicalPlan -> DataFrame. Lives under the `org.apache.spark.sql`
+  * LogicalPlan -> DataFrame, plus the `private[spark]` listener-bus drain
+  * the query trace needs. Lives under the `org.apache.spark.sql`
   * namespace purely for Scala access control; contains only forwarding
   * calls (the standard extension-library pattern for pre-Connect plan
   * construction).
@@ -28,4 +29,7 @@ object GraftSqlBridge {
   /** The session's name resolver (case sensitivity per config). */
   def resolver(spark: SparkSession): org.apache.spark.sql.catalyst.analysis.Resolver =
     spark.asInstanceOf[ClassicSession].sessionState.conf.resolver
+
+  /** Wait until every listener event posted so far has been handled. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

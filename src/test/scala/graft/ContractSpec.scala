@@ -88,6 +88,30 @@ class ContractSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("one measurement listener and one timing path; Bench and ClusterSmoke never count a result") {
+    // The trace in QueryRun is the only listener that measures; PlanCache's
+    // is its application-end purge. Bench and ClusterSmoke time the full
+    // output through QueryRun, never a count() Catalyst can prune.
+    val listen = Seq("addSparkListener", "listenerManager.register", "streams.addListener")
+    val gone = Seq("object Explain", "ExplainDump", "JobProfile", "priorMin", "SPARK_GRAFT_MERGE_SIDECAR")
+    val offenders = for {
+      p <- Files.walk(repoRoot.resolve("src/main")).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala")
+      file = p.getFileName.toString
+      (line, i) <- read(p).linesIterator.zipWithIndex
+      if (listen.exists(line.contains) && !Set("QueryRun.scala", "PlanCache.scala")(file)) ||
+        gone.exists(line.contains) ||
+        (Set("Bench.scala", "ClusterSmoke.scala")(file) && line.contains(".count()") &&
+          !line.contains("""read.parquet(s"$sfDir/lineitem.parquet").count()"""))
+    } yield s"${repoRoot.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val planCache = read(repoRoot.resolve("src/main/scala/graft/operators/PlanCache.scala"))
+    assert(planCache.split("addSparkListener", -1).length === 2 && planCache.contains("onApplicationEnd"))
+    val queryRun = read(repoRoot.resolve("src/main/scala/graft/QueryRun.scala"))
+    for (call <- listen)
+      assert(queryRun.split(java.util.regex.Pattern.quote(call), -1).length <= 2, call)
+  }
+
   test("PlanCache.Max holds every memoized query family plus the CC label tables") {
     // One entry per memo call site (each keyed on one dir): a session
     // that touches them all must not evict-thrash its CC label tables.

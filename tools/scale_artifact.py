@@ -13,6 +13,17 @@ def load(path):
     return detail
 
 a, b = load(sf01_sidecar), load(sf1_sidecar)
+# A failed query has no time, so a leg with failures is not comparable:
+# refuse it, and refuse two legs that disagree on which queries failed.
+# (Sidecars from before the failure accounting carry neither field.)
+fa, fb = set(a.get("failed", {})), set(b.get("failed", {}))
+if fa != fb:
+    sys.exit(f"refused: the legs disagree on which queries failed: only in "
+             f"{sf01_sidecar}: {sorted(fa - fb)}; only in {sf1_sidecar}: {sorted(fb - fa)}")
+for path, d in ((sf01_sidecar, a), (sf1_sidecar, b)):
+    if d.get("correct") is False:
+        sys.exit(f"refused: {path} reads \"correct\": false "
+                 f"(failed: {d.get('failed', {})})")
 qa, qb = a["queries_min"], b["queries_min"]
 common = sorted(set(qa) & set(qb))
 growth = {q: round(qb[q] / max(qa[q], 1e-9), 2) for q in common}
