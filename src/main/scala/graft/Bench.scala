@@ -21,7 +21,7 @@ object Bench {
   }
 
   /** `trials` interleaved passes over `queries`, then one more execution of
-    * up to `retryCap` queries whose trials disagree the most. */
+    * up to `retryCap` queries whose warm trials disagree the most. */
   def measure(spark: SparkSession, queries: Seq[(String, QueryRun.Query)], sfDir: String,
               trials: Int, retryCap: Int, trace: Option[QueryRun.Trace]): Measured = {
     val runs = collection.mutable.LinkedHashMap(queries.map(_._1 -> Vector.empty[QueryRun.Outcome]): _*)
@@ -33,15 +33,17 @@ object Bench {
     // trial of a few.
     for (_ <- 1 to trials; (name, fn) <- queries) time(name, fn)
     // Post-pass retry: a load burst that spans ALL interleaved trials
-    // defeats the per-query min, so the queries whose trials disagree
-    // the most (and aren't trivially fast) get one more timing at the
-    // end, when the burst has most likely passed. Minima only improve.
+    // defeats the per-query min, so the queries whose warm trials
+    // disagree the most (and aren't trivially fast) get one more timing
+    // at the end, when the burst has most likely passed. Minima only
+    // improve. The cold first execution is left out of the spread: it
+    // pays lake-state builds and memo prologues, not load.
     def ratio(n: String): Double = {
-      val xs = runs(n).map(_.sec)
+      val xs = runs(n).tail.map(_.sec)
       xs.max / math.max(xs.min, 1e-9)
     }
     val suspects = queries.filter { case (n, _) =>
-      runs(n).size > 1 && runs(n).forall(_.result.isRight) && runs(n).map(_.sec).min > 0.15 &&
+      runs(n).size > 2 && runs(n).forall(_.result.isRight) && runs(n).map(_.sec).min > 0.15 &&
         ratio(n) > 2.5
     }.sortBy { case (n, _) => -ratio(n) }.take(math.max(0, retryCap))
     suspects.foreach { case (n, fn) => time(n, fn) }

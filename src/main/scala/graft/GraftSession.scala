@@ -54,6 +54,17 @@ object GraftSession {
     spark
   }
 
+  /** The only way to scope a per-query setting: run `f` on a cloned child
+    * of `spark` carrying `settings`, so the shared conf is never set and
+    * temp views `f` registers die with the child. On exit
+    * [[onSessionEnd]] releases the child's PlanCache entries, so what `f`
+    * returns must not read a memo of the child. */
+  def scoped[T](spark: SparkSession, settings: (String, String)*)(f: SparkSession => T): T = {
+    val child = org.apache.spark.sql.graftbridge.GraftSqlBridge.cloneSession(spark)
+    settings.foreach { case (k, v) => child.conf.set(k, v) }
+    try f(child) finally onSessionEnd(child)
+  }
+
   /** Release the per-session cache of a retiring child session
     * (`spark.newSession()` in a long-lived JVM): the memoized
     * derivations and CC label tables ([[graft.operators.PlanCache]])

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed training of a tiny logistic-regression quality
@@ -8,15 +8,16 @@ import org.apache.spark.sql.functions._
   * curated slice" filter a training-data pipeline runs after the exact
   * gates.
   *
-  * Full-batch gradient descent where ONE training step is ONE
-  * partial-agg aggregation: every row contributes its per-feature
-  * gradient as an order-independent fixed-point long
-  * (`floor(err * x * 2^24)`), so the aggregated sums — and therefore
-  * the learned weights — are bit-identical across partitionings and
-  * cluster sizes (the same mechanism that makes the k-means/centroid
-  * paths bit-stable). Weights live driver-side (k+1 doubles) and
-  * re-enter the next step as literals; driver pacing is `steps` jobs
-  * over the feature projection — the documented bounded regime, like
+  * Full-batch gradient descent where ONE training step is ONE RDD
+  * `treeAggregate` (how Spark's MLlib trainers run theirs): every row
+  * contributes its per-feature gradient as an order-independent
+  * fixed-point long (`floor(err * x * 2^24)`), so the aggregated sums —
+  * and therefore the learned weights — are bit-identical across
+  * partitionings and cluster sizes (the same mechanism that makes the
+  * k-means/centroid paths bit-stable). Weights live driver-side (k+1
+  * doubles) and ship with each step's closure; the feature projection
+  * is planned once, so driver pacing is `steps` jobs with no Catalyst
+  * round between them — the documented bounded regime, like
   * `Bpe.trainVocab`.
   *
   * Fixed-point overflow headroom: per-row gradient magnitude is
@@ -27,33 +28,17 @@ import org.apache.spark.sql.functions._
 object QualityModel {
   final val Scale = 16777216.0 // 2^24 fixed point
 
-  /** Run `f` with AQE disabled on the session. The trainer's driver
-    * pacing is `steps` tiny 1-row aggregations over an
-    * already-materialized feature table: AQE re-plans each one as two
-    * query-stage jobs with an optimizer round between them — pure
-    * per-step driver latency (~90 ms/step measured at sf0.1, identical
-    * on a cluster driver) with nothing to adapt (the exchange is a
-    * single-partition global agg either way). Values are unchanged by
-    * construction: the gradient sums are order-independent fixed-point
-    * longs. Set/restore mutates the shared session conf, so training
-    * must not run concurrently with other queries of the same session
-    * (the sequential Verify/Bench drive shape). */
-  private def withoutAqe[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, prev)
-  }
-
   /** The exact per-row forward pass both the distributed step and the
     * in-memory reference evaluate: left-associated dot, then the
     * standard logistic. Shared here so the spec's reference loop is
-    * the same arithmetic by construction. */
+    * the same arithmetic by construction. `StrictMath.exp` is what
+    * Catalyst's `exp` calls ([[score]]); `Math.exp` may be a JIT
+    * intrinsic that differs from it in the last bit. */
   def forward(w: Array[Double], x: Array[Double]): Double = {
     var m = w(0)
     var j = 0
     while (j < x.length) { m = m + w(j + 1) * x(j); j += 1 }
-    1.0 / (1.0 + math.exp(-m))
+    1.0 / (1.0 + java.lang.StrictMath.exp(-m))
   }
 
   /** Per-feature z-scoring, computed with the same order-independent
@@ -83,37 +68,36 @@ object QualityModel {
   }
 
   /** Train on `feats` (one row per example; `featCols` double columns,
-    * `labelCol` 0.0/1.0 double). Returns k+1 weights (bias first). */
+    * `labelCol` 0.0/1.0 double). Returns k+1 weights (bias first). A
+    * row with a null feature or label contributes no gradient. */
   def train(feats: DataFrame, featCols: Seq[String], labelCol: String,
-            lr: Double, steps: Int): Array[Double] = withoutAqe(feats.sparkSession) {
+            lr: Double, steps: Int): Array[Double] = {
     val k = featCols.size
-    val n = feats.count().toDouble
+    // Planned once: a projection over the pinned feature table, with no
+    // exchange for AQE to re-plan.
+    val rows = feats.select((featCols :+ labelCol).map(c => col(c).cast("double")): _*).rdd
+    val n = rows.count().toDouble
     require(n > 0, "cannot train on an empty feature set")
     val w = Array.fill(k + 1)(0.0)
-    var step = 0
-    while (step < steps) {
-      // margin: left-associated fold, matching `forward`
-      val margin = featCols.zipWithIndex.foldLeft(lit(w(0)): Column) {
-        case (acc, (f, j)) => acc + lit(w(j + 1)) * col(f)
-      }
-      val p = lit(1.0) / (lit(1.0) + exp(-margin))
-      val err = col(labelCol) - p
-      val gradCols = floor(err * Scale).cast("long").as("g0") +:
-        featCols.zipWithIndex.map { case (f, j) =>
-          floor(err * col(f) * Scale).cast("long").as(s"g${j + 1}")
-        }
-      val sums = feats.select(gradCols: _*)
-        .agg(sum(col("g0")).as("s0"),
-          (1 to k).map(j => sum(col(s"g$j")).as(s"s$j")): _*)
-        .head() // ONE row of k+1 longs — bounded by design, not data
-      var j = 0
-      while (j <= k) {
-        w(j) = w(j) + lr * (sums.getLong(j) / Scale) / n
-        j += 1
-      }
-      step += 1
+    for (_ <- 1 to steps) {
+      val sums = rows.treeAggregate(new Array[Long](k + 1))(
+        (acc, r) => gradient(w, r, acc),
+        (a, b) => { for (j <- 0 to k) a(j) += b(j); a })
+      for (j <- 0 to k) w(j) = w(j) + lr * (sums(j) / Scale) / n
     }
     w
+  }
+
+  /** Add one row's fixed-point gradient (features, then label) to `acc`. */
+  private def gradient(w: Array[Double], r: Row, acc: Array[Long]): Array[Long] = {
+    if (!r.anyNull) {
+      val x = Array.tabulate(acc.length - 1)(r.getDouble)
+      val err = r.getDouble(x.length) - forward(w, x)
+      acc(0) += math.floor(err * Scale).toLong
+      var j = 0
+      while (j < x.length) { acc(j + 1) += math.floor(err * x(j) * Scale).toLong; j += 1 }
+    }
+    acc
   }
 
   /** Batch drift in STORED standardized units: max_j

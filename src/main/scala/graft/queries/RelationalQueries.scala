@@ -302,51 +302,41 @@ object RelationalQueries {
     * [[graft.plans.TopKPerGroup]] operator (bounded per-partition
     * heaps), proving at the driver's hash gate that a user writing
     * ordinary leaderboard SQL gets the accelerated plan WITHOUT
-    * changing their query. The rewritten optimized plan is wrapped
-    * back into a DataFrame so the gate's write path executes the
-    * native operator regardless of later conf state, and the
-    * plan shape is asserted in-query: the native node present, no
-    * logical Window left. Shares q_topk_per_group's oracle — the
-    * rewrite must be bit-for-bit invisible in the results. */
-  /** Build `df` with the opt-in TopKRewrite flag ON, assert the rule
-    * fired (native node present, no logical Window survives), and
-    * return the rewritten plan's rows. Shared by the row_number() and
-    * rank() rewrite gate queries. */
-  private def withTopKRewrite(spark: SparkSession)(df: => DataFrame): DataFrame =
+    * changing their query. The plan shape is asserted in-query: the
+    * native node present, no logical Window left. Shares
+    * q_topk_per_group's oracle — the rewrite must be bit-for-bit
+    * invisible in the results. */
+  /** [[withRewriteFlag]] for the row_number() and rank() gates: the
+    * fired-rule evidence is that no logical Window survives. */
+  private def withTopKRewrite(spark: SparkSession)(df: SparkSession => DataFrame): DataFrame =
     withRewriteFlag(spark) { optimized =>
       require(!optimized.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]),
         s"rewritten plan still contains a Window:\n$optimized")
     }(df)
 
-  /** The shared flag dance for every rewrite gate query: flip the
-    * opt-in flag (the extension-injected rule is inert while it is off)
-    * for the duration of ONE optimization, require the native node fired,
-    * run the shape-specific assertion, and hand back the rewritten
-    * plan as a DataFrame so the gate's write path executes it
-    * regardless of later conf state. One definition — the save/set/
-    * restore protocol cannot drift between gate queries. */
+  /** Every rewrite gate query: build `df` on a scoped child session with
+    * the opt-in flag on (the extension-injected rule is inert while it
+    * is off), so the rule runs at its normal optimizer position and the
+    * caller's conf is never set. Require the native node fired, run the
+    * shape-specific assertion, and hand back the child's optimized plan
+    * as a DataFrame of the caller's session. Temp views `df` registers
+    * live and die in the child; gate bodies name the child `spark`, so
+    * they cannot reach the caller's session. */
   private def withRewriteFlag(spark: SparkSession)(
       assertShape: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit)(
-      df: => DataFrame): DataFrame = {
-    val flag = "spark.graft.topk.autoRewrite"
-    val prev = spark.conf.getOption(flag)
-    spark.conf.set(flag, "true")
-    try {
-      // The rule fires during optimization, while the flag is on.
-      val optimized = df.queryExecution.optimizedPlan
-      require(optimized.exists(_.isInstanceOf[graft.plans.TopKPerGroup]),
-        s"TopKRewrite did not fire:\n$optimized")
-      assertShape(optimized)
-      org.apache.spark.sql.graftbridge.GraftSqlBridge.ofRows(spark, optimized)
-    } finally prev match {
-      case Some(v) => spark.conf.set(flag, v)
-      case None => spark.conf.unset(flag)
+      df: SparkSession => DataFrame): DataFrame = {
+    val optimized = graft.GraftSession.scoped(spark, "spark.graft.topk.autoRewrite" -> "true") {
+      child => df(child).queryExecution.optimizedPlan
     }
+    require(optimized.exists(_.isInstanceOf[graft.plans.TopKPerGroup]),
+      s"TopKRewrite did not fire:\n$optimized")
+    assertShape(optimized)
+    org.apache.spark.sql.graftbridge.GraftSqlBridge.ofRows(spark, optimized)
   }
 
   def qTopKRewrite(spark: SparkSession, dir: String): DataFrame =
-    withTopKRewrite(spark) {
+    withTopKRewrite(spark) { spark =>
       val w = Window.partitionBy(col("c_nationkey")).orderBy(col("c_acctbal").desc, col("c_custkey"))
       t(spark, dir, "customer")
         .withColumn("rnk", row_number().over(w))
@@ -365,7 +355,7 @@ object RelationalQueries {
     * tie-breaking column is needed and the DuckDB oracle hash-matches
     * the full tie structure — competition numbering, gaps and all. */
   def qRankRewrite(spark: SparkSession, dir: String): DataFrame =
-    withTopKRewrite(spark) {
+    withTopKRewrite(spark) { spark =>
       val w = Window.partitionBy(col("p_brand")).orderBy(col("p_size"))
       t(spark, dir, "part")
         .withColumn("rnk", rank().over(w))
@@ -385,7 +375,7 @@ object RelationalQueries {
     * exactly. In-query plan assertions: native node present, no
     * logical Window. */
   def qArgmaxRewrite(spark: SparkSession, dir: String): DataFrame =
-    withTopKRewrite(spark) {
+    withTopKRewrite(spark) { spark =>
       val w = Window.partitionBy(col("p_brand"))
       t(spark, dir, "part")
         .withColumn("max_size", max(col("p_size")).over(w))
@@ -408,7 +398,7 @@ object RelationalQueries {
     * join-back SQL itself, so the driver hash proves the rewrite
     * bit-for-bit invisible. */
   def qMinmaxRewrite(spark: SparkSession, dir: String): DataFrame =
-    withJoinBackRewrite(spark) {
+    withJoinBackRewrite(spark) { spark =>
       // SQL text — the spelling users actually write for this shape
       // (the DataFrame self-join form trips Spark's ambiguous-self-join
       // resolution instead of exercising the rule's canonical
@@ -439,7 +429,7 @@ object RelationalQueries {
     * one scan feeds native top-1-with-ties. Oracle = the identical
     * subquery SQL in DuckDB, hash-exact ties included. */
   def qScalarArgmaxRewrite(spark: SparkSession, dir: String): DataFrame =
-    withJoinBackRewrite(spark) {
+    withJoinBackRewrite(spark) { spark =>
       t(spark, dir, "lineitem").createOrReplaceTempView("lineitem_sargmax")
       spark.sql("""
         SELECT t.l_suppkey, t.l_orderkey, t.l_linenumber,
@@ -451,11 +441,11 @@ object RelationalQueries {
         ORDER BY t.l_suppkey, t.l_orderkey, t.l_linenumber""")
     }
 
-  /** [[withTopKRewrite]]'s join-back sibling: same shared flag dance,
-    * but the fired-rule evidence is the JOIN and AGGREGATE
+  /** [[withTopKRewrite]]'s join-back sibling: same scoped flag, but
+    * the fired-rule evidence is the JOIN and AGGREGATE
     * disappearing (the window helper asserts no Window; this shape
     * never had one). */
-  private def withJoinBackRewrite(spark: SparkSession)(df: => DataFrame): DataFrame =
+  private def withJoinBackRewrite(spark: SparkSession)(df: SparkSession => DataFrame): DataFrame =
     withRewriteFlag(spark) { optimized =>
       require(!optimized.exists(p =>
         p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join] ||

@@ -1257,13 +1257,14 @@ object TextQueries {
     * CLUSTER against the heuristic keep/drop label, then map-only
     * scoring of every document — the fastText-style "looks like the
     * curated slice" classifier pipelines run after the exact gates.
-    * Each training step is one partial-agg aggregation whose gradient
-    * sums ride order-independent fixed-point longs, so the weights
-    * (and these scores) are bit-identical across partitionings; the
-    * spec pins exact weight equality against an in-memory reference
-    * loop over the same features. Driver pacing is `steps`(=25)
-    * bounded jobs (Bpe.trainVocab regime); no SQL engine trains a
-    * model, so the driver records rows-only. */
+    * Each training step is one RDD `treeAggregate` over the features,
+    * planned once, whose gradient sums ride order-independent
+    * fixed-point longs, so the weights (and these scores) are
+    * bit-identical across partitionings; the spec pins exact weight
+    * equality against an in-memory reference loop over the same
+    * features. Driver pacing is `steps`(=25) bounded jobs
+    * (Bpe.trainVocab regime); no SQL engine trains a model, so the
+    * driver records rows-only. */
   def qualityClassifierQ(spark: SparkSession, dir: String): DataFrame = {
     val raw = qualityFeatures(docs(spark, dir)).pin(true)
     val (f, _) = graft.operators.QualityModel.standardize(raw, QualityFeatCols)

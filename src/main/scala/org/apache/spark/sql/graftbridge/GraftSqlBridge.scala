@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset, SparkSession => ClassicSession}
 
-/** Minimal bridge to the two `private[sql]` seams an external
-  * whole-operator library needs: Column -> Catalyst Expression, and
-  * LogicalPlan -> DataFrame, plus the `private[spark]` listener-bus drain
-  * the query trace needs. Lives under the `org.apache.spark.sql`
+/** Minimal bridge to the `private[sql]` seams an external
+  * whole-operator library needs: Column -> Catalyst Expression,
+  * LogicalPlan -> DataFrame and session cloning, plus the
+  * `private[spark]` listener-bus drain the query trace needs. Lives under the `org.apache.spark.sql`
   * namespace purely for Scala access control; contains only forwarding
   * calls (the standard extension-library pattern for pre-Connect plan
   * construction).
@@ -20,6 +20,11 @@ object GraftSqlBridge {
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
+
+  /** A child session with a copy of the parent's conf, temp views and
+    * functions; what the child sets stays in the child. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSession].cloneSession()
 
   /** Optimizer-identical floating-point key normalization (0.0/-0.0,
     * NaN canonicalization) for custom grouping operators. */

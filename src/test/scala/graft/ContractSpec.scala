@@ -57,14 +57,19 @@ class ContractSpec extends SparkSpec {
   }
 
   test("stream queries swap no session conf; sessions share one codegen classloader") {
-    // State partitions follow spark.sql.shuffle.partitions: no scope
-    // swaps it around a stream start, and no knob overrides it.
+    // No query sets session conf: GraftSession.scoped, on a cloned
+    // child, is the one way to scope a setting. State partitions follow
+    // spark.sql.shuffle.partitions, and no knob overrides them.
+    val confSets = Seq(".conf.set(", ".conf.unset(", "setConfString")
     val offenders = for {
       p <- Files.walk(repoRoot.resolve("src/main")).iterator().asScala.toSeq
       if p.toString.endsWith(".scala")
+      file = p.getFileName.toString
       (line, i) <- read(p).linesIterator.zipWithIndex
       if line.contains("withStatePartitions") || line.contains("spark.graft.stream.statePartitions") ||
-        (line.contains("spark.conf.set") && p.getFileName.toString == "EventQueries.scala")
+        line.contains("withoutAqe") ||
+        (confSets.exists(line.contains) && file != "GraftSession.scala") ||
+        (line.contains("cloneSession") && !Set("GraftSession.scala", "GraftSqlBridge.scala")(file))
     } yield s"${repoRoot.relativize(p)}:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
     // Artifact isolation off: a stream start's cloned session then keeps

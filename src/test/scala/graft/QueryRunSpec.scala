@@ -64,4 +64,21 @@ class QueryRunSpec extends SparkSpec {
     for (q <- ok)
       assert(Seq("rows", "hash", "cold", "spread", "layers").forall(entries(q).contains), q)
   }
+
+  test("Bench retries on warm spread: a slow cold run gets no retry, a slow warm trial does") {
+    // Each query sleeps in its build; the call count picks which one is slow.
+    def slowOn(slow: Int): QueryRun.Query = {
+      val calls = new java.util.concurrent.atomic.AtomicInteger()
+      (s, _) => {
+        Thread.sleep(if (calls.incrementAndGet() == slow) 3000 else 400)
+        s.range(1).toDF()
+      }
+    }
+    val queries = Seq("cold_slow" -> slowOn(1), "warm_slow" -> slowOn(3))
+    val m = Bench.measure(spark, queries, Sf, trials = 3, retryCap = 2, None)
+    val runs = m.runs.toMap
+    assert(runs("cold_slow").size === 3, "the cold first run alone drew a retry")
+    assert(runs("warm_slow").size === 4, "a slow warm trial drew no retry")
+    assert(m.retried === 1)
+  }
 }

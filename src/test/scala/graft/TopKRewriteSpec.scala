@@ -392,6 +392,8 @@ class TopKRewriteSpec extends SparkSpec {
     assert(spark.conf.getOption(Flag).isEmpty)
     val df = queries.RelationalQueries.qMinmaxRewrite(spark, Sf)
     assert(spark.conf.getOption(Flag).isEmpty)
+    // The gate's temp view lived and died in its scoped child session.
+    assert(!spark.catalog.tableExists("lineitem_minmax"))
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("TopKPerGroup"), s"native operator missing:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("HashJoin"),
@@ -459,6 +461,7 @@ class TopKRewriteSpec extends SparkSpec {
     assert(spark.conf.getOption(Flag).isEmpty)
     val df = queries.RelationalQueries.qScalarArgmaxRewrite(spark, Sf)
     assert(spark.conf.getOption(Flag).isEmpty)
+    assert(!spark.catalog.tableExists("lineitem_sargmax"))
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("TopKPerGroup"), s"native operator missing:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("HashJoin"),
