@@ -9,10 +9,9 @@ import org.apache.spark.sql.functions._
   * unique key, not-null, regex, numeric range, enum membership.
   *
   * Instead of a driver-side assert, rules evaluate distributed and the
-  * operator returns one row per rule with its violation count (plus a
-  * deterministic sample key), so a 100 TB validation is a single
-  * aggregation pass; uniqueness is a groupBy on the key (shuffle on key,
-  * partial-agg friendly).
+  * operator returns one row per rule with its violation count. `report`
+  * reads its input once: the row rules ride the Unique rule's keyed
+  * aggregate (shuffle on key, partial-agg friendly) as per-row flags.
   */
 object Validate {
   sealed trait Rule { def name: String; def column: String }
@@ -67,29 +66,40 @@ object Validate {
       .select(lit(childTable).as("table"), lit("ref_integrity").as("rule"),
         lit(s"$childCol->$parentTable.$parentCol").as("column"), col("violations"))
 
-  /** One row per rule: (table, rule, column, violations). Row-level rules
-    * fold into a single aggregate pass over the table; Unique adds one
-    * groupBy on its key. */
+  /** One row per rule: (table, rule, column, violations); every count is
+    * 0 on an empty input. The input is scanned once: each row rule
+    * becomes a 0/1 flag on a projection of the first Unique rule's key,
+    * one keyed aggregate counts each key's rows and sums its flags, and
+    * one global aggregate sums those sums plus the counts of the keys
+    * seen more than once (null keys group together, so they count as
+    * duplicates). Without a Unique rule the flags fold into one global
+    * aggregate. One `stack` emits the rule rows. A second Unique rule
+    * has its own keyed aggregate, which scans the input again. */
   def report(table: String, df: DataFrame, rules: Seq[Rule]): DataFrame = {
-    val spark = df.sparkSession
     val rowRules = rules.filterNot(_.isInstanceOf[Unique])
-    val rowAggs = rowRules.map(r =>
-      sum(when(violationPred(r), 1L).otherwise(0L)).as(s"${r.name}:${r.column}"))
-    val rowDf =
-      if (rowRules.isEmpty) spark.emptyDataFrame
-      else {
-        val agg = df.agg(rowAggs.head, rowAggs.tail: _*)
-        val stacked = rowRules.map(r =>
-          agg.select(lit(table).as("table"), lit(r.name).as("rule"),
-            lit(r.column).as("column"), col(s"`${r.name}:${r.column}`").as("violations")))
-        stacked.reduce(_ unionAll _)
-      }
-    val uniqueDfs = rules.collect { case Unique(c) =>
+    val uniques = rules.collect { case u: Unique => u }
+    val flags = rowRules.indices.map(i => s"__v$i")
+    val flagCols = rowRules.zip(flags).map { case (r, f) =>
+      when(violationPred(r), 1L).otherwise(0L).as(f)
+    }
+    val sums = flags.map(f => sum(col(f)).as(f))
+    val (totals, counted) = uniques.headOption match {
+      case Some(u) =>
+        val perKey = df.select(col(u.column).as("__key") +: flagCols: _*)
+          .groupBy(col("__key")).agg(count(lit(1)).as("__n"), sums: _*)
+        (perKey.agg(sum(when(col("__n") > 1, col("__n"))).as("__dup"), sums: _*),
+          rowRules.zip(flags) :+ (u -> "__dup"))
+      case None =>
+        (df.select(flagCols: _*).agg(sums.head, sums.tail: _*), rowRules.zip(flags))
+    }
+    val rows = totals.select(stack(lit(counted.size) +: counted.flatMap { case (r, v) =>
+      Seq(lit(table), lit(r.name), lit(r.column), coalesce(col(v), lit(0L)))
+    }: _*).as(Seq("table", "rule", "column", "violations")))
+    (rows +: uniques.drop(1).map { case Unique(c) =>
       df.groupBy(col(c)).agg(count(lit(1)).as("n")).where(col("n") > 1)
         .agg(coalesce(sum(col("n")), lit(0L)).as("violations"))
         .select(lit(table).as("table"), lit("unique").as("rule"),
           lit(c).as("column"), col("violations"))
-    }
-    (Seq(rowDf).filter(_.columns.nonEmpty) ++ uniqueDfs).reduce(_ unionAll _)
+    }).reduce(_ unionAll _)
   }
 }

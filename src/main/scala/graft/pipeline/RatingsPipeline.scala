@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.operators.{Conform, ConformSpec, Validate, Windows}
 import graft.sinks.PartitionedWriter
 import graft.sources.{XmlRecordSource, ZipSource}
@@ -19,6 +21,8 @@ import graft.sources.{XmlRecordSource, ZipSource}
   * funnel), validation returns a violations report instead of a
   * driver-side assert, and idempotency is dynamic partition overwrite
   * instead of list-blobs-then-skip (no O(objects) driver listing).
+  * Lake reads declare [[lakeSchema]], so serving the lake runs no
+  * schema-inference job.
   */
 object RatingsPipeline {
 
@@ -40,6 +44,27 @@ object RatingsPipeline {
     // violation nor used in age math (reference preprocess semantics).
     nullIf = Map("birthday" -> "0"))
 
+  /** The string fields the zip path parses from each `<player>` record. */
+  private val SourceFields: Seq[String] =
+    Seq("fideid", "name", "country", "sex", "title", "rating", "games", "k", "birthday")
+
+  private def conform(raw: DataFrame, periodYear: Int, periodMonth: Int): DataFrame =
+    Conform(raw, ConformRatings.copy(enrich = Seq(
+      "period_year" -> lit(periodYear), "period_month" -> lit(periodMonth))))
+
+  /** The schema of the lake `ingestPeriod` writes, as the parquet reader
+    * would infer it: `ConformRatings` over the parsed string fields, the
+    * period partition columns last, every field nullable. It comes from
+    * analyzing `Conform` over an empty frame, so it runs no job. The
+    * JVM-wide schema cache (`TableLoader.schemaOf`) cannot serve the
+    * lake: it is keyed on the file listing, which each period's write
+    * changes. */
+  def lakeSchema(spark: SparkSession): StructType = {
+    val raw = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(SourceFields.map(StructField(_, StringType))))
+    StructType(conform(raw, 0, 0).schema.map(_.copy(nullable = true)))
+  }
+
   val RatingRules: Seq[Validate.Rule] = Seq(
     Validate.Unique("fide_id"),
     Validate.NotNull("rating"),
@@ -58,10 +83,8 @@ object RatingsPipeline {
       .where(col("entry").endsWith(".xml"))
       .select(decode(col("content"), "UTF-8").as("xml"))
       .as[String]
-    val raw = XmlRecordSource.read(xmlDocs, "player",
-      Seq("fideid", "name", "country", "sex", "title", "rating", "games", "k", "birthday"))
-    val conformed = Conform(raw, ConformRatings.copy(enrich = Seq(
-      "period_year" -> lit(periodYear), "period_month" -> lit(periodMonth))))
+    val conformed = conform(XmlRecordSource.read(xmlDocs, "player", SourceFields),
+      periodYear, periodMonth)
     val report = Validate.report("ratings", conformed, RatingRules)
     PartitionedWriter.write(conformed, lakePath, Seq("period_year", "period_month"),
       overwritePartitions = overwrite)
@@ -97,8 +120,7 @@ object RatingsPipeline {
     val raw = spark.read.format("graft-xml")
       .option("recordTag", "player")
       .load(xmlGlob)
-    val conformed = Conform(raw, ConformRatings.copy(enrich = Seq(
-      "period_year" -> lit(periodYear), "period_month" -> lit(periodMonth))))
+    val conformed = conform(raw, periodYear, periodMonth)
     val report = Validate.report("ratings", conformed, RatingRules)
     PartitionedWriter.write(conformed, lakePath, Seq("period_year", "period_month"),
       overwritePartitions = overwrite)
@@ -113,7 +135,7 @@ object RatingsPipeline {
   def leaderboard(spark: SparkSession, lakePath: String, periodYear: Int,
                   periodMonth: Int, k: Int): DataFrame =
     Windows.topKPerGroupNative(
-      spark.read.parquet(lakePath)
+      spark.read.schema(lakeSchema(spark)).parquet(lakePath)
         .where(col("period_year") === periodYear && col("period_month") === periodMonth),
       k, Seq(col("fide_federation")), Seq(col("rating").desc, col("fide_id")))
       .select(col("fide_federation"), col("rnk"), col("fide_id"),
@@ -122,7 +144,9 @@ object RatingsPipeline {
   /** Backfill planning (dates.py `get_date_range` analog, distributed):
     * all (year, month) periods in [start, end] minus the periods already
     * present in the lake — the driver-side existence loop
-    * (ingest_web_to_gcs.py:228-232) becomes one anti join. */
+    * (ingest_web_to_gcs.py:228-232) becomes one anti join. A lake path
+    * that does not exist yet holds no period; a lake that cannot be read
+    * raises rather than planning a full backfill. */
   def missingPeriods(spark: SparkSession, lakePath: String,
                      startYear: Int, startMonth: Int,
                      endYear: Int, endMonth: Int): DataFrame = {
@@ -131,10 +155,12 @@ object RatingsPipeline {
       make_date(lit(endYear), lit(endMonth), lit(1)),
       expr("interval 1 month"))).as("m"))
       .select(year(col("m")).as("period_year"), month(col("m")).as("period_month"))
-    val existing =
-      try spark.read.parquet(lakePath).select("period_year", "period_month").distinct()
-      catch { case _: Throwable => wanted.limit(0) }
-    wanted.join(existing, Seq("period_year", "period_month"), "left_anti")
-      .orderBy(col("period_year"), col("period_month"))
+    val lake = new Path(lakePath)
+    val missing =
+      if (!lake.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lake)) wanted
+      else wanted.join(spark.read.schema(lakeSchema(spark)).parquet(lakePath)
+        .select("period_year", "period_month").distinct(),
+        Seq("period_year", "period_month"), "left_anti")
+    missing.orderBy(col("period_year"), col("period_month"))
   }
 }

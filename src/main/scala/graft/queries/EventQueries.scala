@@ -420,14 +420,26 @@ object EventQueries {
     * behavior itself is spec'd in DedupStreamSpec), and only the dedup
     * key is emitted, so arrival-order nondeterminism in which
     * duplicate row survives is projected away — the streamed key set
-    * is deterministic. */
+    * is deterministic.
+    *
+    * The stream runs one micro-batch. Batch 0 emits every surviving key,
+    * and a trailing no-data batch would only evict state, so this
+    * stream alone starts on a scoped child session with
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false`. The other
+    * `ev_stream_*` queries keep their no-data batch: in it the
+    * sentinel's watermark closes their sessions and windows. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     val src = streamSourceFixture(spark, dir)
-    val deduped = graft.streaming.DedupStream.dropDupKeys(
-      spark.readStream.schema(TableLoader.schemaOf(spark, src)).parquet(src)
-        .select(col("user_id"), col("event_type"), col("ts")),
-      Seq("user_id", "event_type"), "30 days")
-    drainToMemory(spark, "dedup", deduped).where(col("user_id") >= 0)
+    val keys = graft.GraftSession.scoped(spark,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { child =>
+      val deduped = graft.streaming.DedupStream.dropDupKeys(
+        child.readStream.schema(TableLoader.schemaOf(child, src)).parquet(src)
+          .select(col("user_id"), col("event_type"), col("ts")),
+        Seq("user_id", "event_type"), "30 days")
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.ofRows(spark,
+        drainToMemory(child, "dedup", deduped).queryExecution.analyzed)
+    }
+    keys.where(col("user_id") >= 0)
       .select(col("user_id"), col("event_type"))
       .orderBy(col("user_id"), col("event_type"))
   }

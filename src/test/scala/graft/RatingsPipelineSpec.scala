@@ -4,6 +4,7 @@ import java.io.{File, FileOutputStream}
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.pipeline.RatingsPipeline
 import graft.sources.XmlRecordSource
@@ -144,5 +145,55 @@ class RatingsPipelineSpec extends SparkSpec {
     val missing = RatingsPipeline.missingPeriods(spark, lake, 2024, 1, 2024, 4)
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
     assert(missing === Seq((2024, 1), (2024, 3), (2024, 4)))
+  }
+
+  private def ingestFeb24(tag: String): String = {
+    val zipDir = Files.createTempDirectory(s"ratingszips$tag").toFile
+    val lake = Files.createTempDirectory(s"ratingslake$tag").toFile.getAbsolutePath + "/ratings"
+    writeRatingsZip(zipDir, "feb24.zip", Seq(
+      player(1, "Alice", "USA", "F", 2700, 1990),
+      player(2, "Bob", "GER", "M", 2650, 1985),
+      player(2, "Bob-Dup", "GER", "M", 2651, 0)))
+    RatingsPipeline.ingestPeriod(spark, zipDir.getAbsolutePath + "/*.zip", lake, 2024, 2)
+    lake
+  }
+
+  test("the ingest report parses its drop once and its digest runs at most 3 jobs") {
+    val zipDir = Files.createTempDirectory("ratingszips6").toFile
+    val lake = Files.createTempDirectory("ratingslake6").toFile.getAbsolutePath + "/ratings"
+    writeRatingsZip(zipDir, "jun24.zip", Seq(
+      player(1, "Alice", "USA", "F", 2700, 1990),
+      player(1, "Alice-Dup", "USA", "F", 2701, 1990)))
+    val report = RatingsPipeline.ingestPeriod(spark, zipDir.getAbsolutePath + "/*.zip",
+      lake, 2024, 6)
+    assert(jobsOf(QueryRun.digest(report)) <= 3)
+    report.collect()
+    val leaves = new AdaptiveSparkPlanHelper {}.collectLeaves(report.queryExecution.executedPlan)
+    assert(leaves.map(_.nodeName) === Seq("Scan ExistingRDD"), leaves.mkString("\n"))
+  }
+
+  test("lakeSchema is the lake's inferred schema, and lake reads build with no job") {
+    val lake = ingestFeb24("7")
+    assert(RatingsPipeline.lakeSchema(spark) === spark.read.parquet(lake).schema)
+    assert(jobsOf(RatingsPipeline.leaderboard(spark, lake, 2024, 2, 10)) === 0)
+    assert(jobsOf(RatingsPipeline.missingPeriods(spark, lake, 2024, 1, 2024, 4)) === 0)
+    assert(RatingsPipeline.leaderboard(spark, lake, 2024, 2, 10).count() === 3)
+  }
+
+  test("missingPeriods lists every period for a lake path that does not exist") {
+    val lake = Files.createTempDirectory("ratingslake8").toFile.getAbsolutePath + "/none"
+    val missing = RatingsPipeline.missingPeriods(spark, lake, 2023, 11, 2024, 2)
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(missing === Seq((2023, 11), (2023, 12), (2024, 1), (2024, 2)))
+  }
+
+  test("missingPeriods raises on a lake it cannot read") {
+    val lake = Files.createTempDirectory("ratingslake9").toFile
+    val part = new File(lake, "period_year=2024/period_month=2")
+    assert(part.mkdirs())
+    Files.writeString(new File(part, "part-0.parquet").toPath, "not a parquet file")
+    intercept[org.apache.spark.SparkException] {
+      RatingsPipeline.missingPeriods(spark, lake.getAbsolutePath, 2024, 1, 2024, 4).collect()
+    }
   }
 }

@@ -12,7 +12,6 @@ import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -137,30 +136,7 @@ class SourcesSpec extends SparkSpec {
     // to see, and the second load must run none.
     val dir = Files.createTempDirectory("graftbind").toFile.getAbsolutePath
     Files.copy(new File(s"$Sf/orders.parquet").toPath, new File(s"$dir/orders.parquet").toPath)
-    val group = s"graft-bind-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    def jobsOf(label: String)(body: => Unit): Int = {
-      sc.setJobGroup(s"$group-$label", label)
-      try body finally sc.clearJobGroup()
-      // Listener events arrive in order: once a marker job is seen, every
-      // job of `body` has been counted.
-      sc.setJobGroup(s"$group-$label-marker", "marker")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.containsKey(s"$group-$label-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.containsKey(s"$group-$label-marker"), "listener never saw the marker job")
-      Option(jobs.get(s"$group-$label")).map(_.intValue).getOrElse(0)
-    }
-    try {
-      assert(jobsOf("first")(TableLoader.load(spark, dir, "orders")) >= 1)
-      assert(jobsOf("second")(TableLoader.load(spark, dir, "orders")) === 0)
-    } finally sc.removeSparkListener(listener)
+    assert(jobsOf(TableLoader.load(spark, dir, "orders")) >= 1)
+    assert(jobsOf(TableLoader.load(spark, dir, "orders")) === 0)
   }
 }

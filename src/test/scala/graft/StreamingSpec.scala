@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -144,19 +144,28 @@ class StreamingSpec extends SparkSpec {
   test("a repeated stream drain commits one state partition per slot and compiles nothing") {
     // State partitions follow the session's shuffle partitions (no
     // per-query override), and the second start of the same stream
-    // reuses the first one's generated classes.
+    // reuses the first one's generated classes. The dedup stream starts
+    // on a scoped child session, whose own StreamingQueryManager a
+    // listener on `spark.streams` would not hear; the context's
+    // listener bus carries every session's stream events.
     val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     val partitions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit =
-        if (e.name.startsWith("graft_stream_dedup_")) started.add(e.runId)
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name.startsWith("graft_stream_dedup_"))
-          e.progress.stateOperators.foreach(op => partitions.add(op.numShufflePartitions))
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    val progress = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Integer]()
+    val listener = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: QueryStartedEvent =>
+          if (e.name.startsWith("graft_stream_dedup_")) started.add(e.runId)
+        case e: QueryProgressEvent =>
+          if (e.progress.name.startsWith("graft_stream_dedup_")) {
+            progress.merge(e.progress.runId, 1, (a: Integer, b: Integer) => a + b)
+            e.progress.stateOperators.foreach(op => partitions.add(op.numShufflePartitions))
+          }
+        case e: QueryTerminatedEvent => ended.add(e.runId)
+        case _ =>
+      }
     }
-    spark.streams.addListener(listener)
+    spark.sparkContext.addSparkListener(listener)
     val compiles = try {
       val first = EventQueries.streamDedup(spark, Sf).collect().toSeq
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -167,11 +176,22 @@ class StreamingSpec extends SparkSpec {
         assert(started.size === 2 && ended.containsAll(started))
       }
       compiled
-    } finally spark.streams.removeListener(listener)
+    } finally spark.sparkContext.removeSparkListener(listener)
     val slots = spark.conf.get("spark.sql.shuffle.partitions").toLong
     assert(!partitions.isEmpty)
     assert(partitions.asScala.forall(_ == slots), partitions.asScala.mkString(", "))
     assert(compiles === 0)
+    // one micro-batch per call: the trailing no-data batch is off, on the
+    // child session only
+    assert(progress.keySet.asScala === started.asScala)
+    assert(progress.values.asScala.forall(_ == 1), progress.asScala.mkString(", "))
+    assert(spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") === "true")
+    // the sessionizer still needs its no-data batch to close the last
+    // session of every user: it must equal its batch twin
+    val sessions = EventQueries.streamSessions(spark, Sf)
+      .select("user_id", "session_seq", "n_events", "start_us", "end_us", "value_cents")
+      .collect().map(_.toSeq).toSeq
+    assert(sessions.nonEmpty && sessions === EventQueries.sessionize(spark, Sf).collect().map(_.toSeq).toSeq)
   }
 
   test("a stream drain leaves no checkpoint under a configured location") {
