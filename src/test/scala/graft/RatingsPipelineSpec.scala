@@ -180,6 +180,36 @@ class RatingsPipelineSpec extends SparkSpec {
     assert(RatingsPipeline.leaderboard(spark, lake, 2024, 2, 10).count() === 3)
   }
 
+  test("a one-archive drop is one partition: its report and the missing periods need no exchange") {
+    val zipDir = Files.createTempDirectory("ratingszips10").toFile
+    val lake = Files.createTempDirectory("ratingslake10").toFile.getAbsolutePath + "/ratings"
+    writeRatingsZip(zipDir, "may24.zip", Seq(
+      player(1, "Alice", "USA", "F", 2700, 1990),
+      player(1, "Alice-Dup", "USA", "F", 2701, 1990),
+      player(2, "Bob", "GERM", "M", 2650, 1850)))
+    val report = RatingsPipeline.ingestPeriod(spark, zipDir.getAbsolutePath + "/*.zip",
+      lake, 2024, 5)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def exchanges(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      helper.collect(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e.nodeName
+      }
+    }
+    assert(exchanges(report).isEmpty)
+    assert(jobsOf(QueryRun.digest(report)) === 1)
+    val rep = report.collect().map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
+    assert(rep === Map(("unique", "fide_id") -> 2L, ("not_null", "rating") -> 0L,
+      ("regex", "fide_federation") -> 1L, ("range", "birth_year") -> 1L,
+      ("range", "period_month") -> 0L))
+    // only the lake's period list is shuffled (and broadcast): the sort
+    // and the anti join stay in the one partition of the wanted months
+    val missing = RatingsPipeline.missingPeriods(spark, lake, 2024, 3, 2024, 7)
+    assert(exchanges(missing).sorted === Seq("BroadcastExchange", "Exchange"))
+    assert(missing.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq ===
+      Seq((2024, 3), (2024, 4), (2024, 6), (2024, 7)))
+  }
+
   test("missingPeriods lists every period for a lake path that does not exist") {
     val lake = Files.createTempDirectory("ratingslake8").toFile.getAbsolutePath + "/none"
     val missing = RatingsPipeline.missingPeriods(spark, lake, 2023, 11, 2024, 2)
