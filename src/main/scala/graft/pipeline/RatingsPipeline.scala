@@ -83,8 +83,13 @@ object RatingsPipeline {
       .where(col("entry").endsWith(".xml"))
       .select(decode(col("content"), "UTF-8").as("xml"))
       .as[String]
-    val conformed = conform(XmlRecordSource.read(xmlDocs, "player", SourceFields),
-      periodYear, periodMonth)
+    val raw = XmlRecordSource.read(xmlDocs, "player", SourceFields)
+    // A drop that is one split (one archive) is declared one partition.
+    // `coalesce(1)` of a single partition moves no data, but the planner
+    // then knows the records are in one place, so the report's keyed and
+    // global aggregates run in the parse task with no exchange.
+    val drop = if (raw.rdd.getNumPartitions == 1) raw.coalesce(1) else raw
+    val conformed = conform(drop, periodYear, periodMonth)
     val report = Validate.report("ratings", conformed, RatingRules)
     PartitionedWriter.write(conformed, lakePath, Seq("period_year", "period_month"),
       overwritePartitions = overwrite)

@@ -373,18 +373,29 @@ object EventQueries {
     * directory (under `spark.sql.streaming.checkpointLocation` if set,
     * else the JVM temp dir), deleted after `stop()`; the sink's temp
     * view is dropped too, since `spark.table` has already resolved the
-    * frame's plan. Neither outlives the call. */
-  private def drainToMemory(spark: SparkSession, tag: String, stream: Dataset[_]): DataFrame = {
+    * frame's plan. Neither outlives the call.
+    *
+    * `oneBatch` runs the stream as exactly one micro-batch over all the
+    * available input (`Trigger.Once`), with no trailing no-data batch.
+    * `Trigger.AvailableNow` would still run that batch, and the session
+    * setting that turns it off would apply to every stream started in
+    * the session. */
+  @scala.annotation.nowarn("cat=deprecation")
+  private def drainToMemory(spark: SparkSession, tag: String, stream: Dataset[_],
+                            oneBatch: Boolean = false): DataFrame = {
     val name = s"graft_stream_${tag}_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val ckpt = new Path(spark.conf.getOption("spark.sql.streaming.checkpointLocation")
       .getOrElse(System.getProperty("java.io.tmpdir")), name)
     try {
-      val query = stream.writeStream
+      val writer = stream.writeStream
         .format("memory").queryName(name)
         .option("checkpointLocation", ckpt.toString)
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      try query.processAllAvailable() finally query.stop()
+      val query =
+        if (oneBatch) writer.trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
+        else writer.start()
+      try { if (oneBatch) query.awaitTermination() else query.processAllAvailable() }
+      finally query.stop()
       spark.table(name)
     } finally {
       spark.catalog.dropTempView(name)
@@ -422,24 +433,18 @@ object EventQueries {
     * duplicate row survives is projected away — the streamed key set
     * is deterministic.
     *
-    * The stream runs one micro-batch. Batch 0 emits every surviving key,
-    * and a trailing no-data batch would only evict state, so this
-    * stream alone starts on a scoped child session with
-    * `spark.sql.streaming.noDataMicroBatches.enabled=false`. The other
-    * `ev_stream_*` queries keep their no-data batch: in it the
-    * sentinel's watermark closes their sessions and windows. */
+    * The stream runs one micro-batch (`drainToMemory(oneBatch = true)`).
+    * Batch 0 emits every surviving key, and a trailing no-data batch
+    * would only evict state. The other `ev_stream_*` queries keep their
+    * no-data batch: in it the sentinel's watermark closes their sessions
+    * and windows. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     val src = streamSourceFixture(spark, dir)
-    val keys = graft.GraftSession.scoped(spark,
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { child =>
-      val deduped = graft.streaming.DedupStream.dropDupKeys(
-        child.readStream.schema(TableLoader.schemaOf(child, src)).parquet(src)
-          .select(col("user_id"), col("event_type"), col("ts")),
-        Seq("user_id", "event_type"), "30 days")
-      org.apache.spark.sql.graftbridge.GraftSqlBridge.ofRows(spark,
-        drainToMemory(child, "dedup", deduped).queryExecution.analyzed)
-    }
-    keys.where(col("user_id") >= 0)
+    val deduped = graft.streaming.DedupStream.dropDupKeys(
+      spark.readStream.schema(TableLoader.schemaOf(spark, src)).parquet(src)
+        .select(col("user_id"), col("event_type"), col("ts")),
+      Seq("user_id", "event_type"), "30 days")
+    drainToMemory(spark, "dedup", deduped, oneBatch = true).where(col("user_id") >= 0)
       .select(col("user_id"), col("event_type"))
       .orderBy(col("user_id"), col("event_type"))
   }

@@ -57,13 +57,7 @@ object XmlRecordSource {
   /** Parse a Dataset of XML document strings into a DataFrame with the
     * given string fields (cast downstream with Conform). Runs per
     * partition on executors. `permissive = true` skips malformed
-    * documents instead of failing.
-    *
-    * Input that is one split (one archive: a monthly drop) comes back
-    * as one declared partition. `coalesce(1)` of a single partition
-    * moves no data, but the planner then knows the records are in one
-    * place, so keyed and global aggregates over them (the validation
-    * report) run in the parse task with no exchange. */
+    * documents instead of failing. */
   def read(docs: Dataset[String], recordTag: String, fields: Seq[String],
            permissive: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
@@ -72,8 +66,7 @@ object XmlRecordSource {
       if (permissive) parseRecordsPermissive(_, recordTag) else parseRecords(_, recordTag)
     val rows = docs.rdd.mapPartitions(_.flatMap(parse)
       .map(m => Row.fromSeq(fields.map(m.get(_).orNull))))
-    val df = spark.createDataFrame(rows, schema)
-    if (rows.getNumPartitions == 1) df.coalesce(1) else df
+    spark.createDataFrame(rows, schema)
   }
 
   /** Count malformed documents in a collection (monitoring side of the

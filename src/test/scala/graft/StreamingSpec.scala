@@ -144,10 +144,10 @@ class StreamingSpec extends SparkSpec {
   test("a repeated stream drain commits one state partition per slot and compiles nothing") {
     // State partitions follow the session's shuffle partitions (no
     // per-query override), and the second start of the same stream
-    // reuses the first one's generated classes. The dedup stream starts
-    // on a scoped child session, whose own StreamingQueryManager a
-    // listener on `spark.streams` would not hear; the context's
-    // listener bus carries every session's stream events.
+    // reuses the first one's generated classes. The context's listener
+    // bus carries the stream events of every session; a listener on the
+    // caller's `spark.streams` must hear the dedup stream too, so the
+    // stream runs in the caller's session, not in a child.
     val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     val partitions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -165,7 +165,15 @@ class StreamingSpec extends SparkSpec {
         case _ =>
       }
     }
+    val heard = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val sessionListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name.startsWith("graft_stream_dedup_")) heard.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
     spark.sparkContext.addSparkListener(listener)
+    spark.streams.addListener(sessionListener)
     val compiles = try {
       val first = EventQueries.streamDedup(spark, Sf).collect().toSeq
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -174,15 +182,19 @@ class StreamingSpec extends SparkSpec {
       assert(first.nonEmpty && second.collect().toSeq === first)
       eventually(timeout(60.seconds)) {
         assert(started.size === 2 && ended.containsAll(started))
+        assert(heard.asScala === started.asScala)
       }
       compiled
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.streams.removeListener(sessionListener)
+    }
     val slots = spark.conf.get("spark.sql.shuffle.partitions").toLong
     assert(!partitions.isEmpty)
     assert(partitions.asScala.forall(_ == slots), partitions.asScala.mkString(", "))
     assert(compiles === 0)
-    // one micro-batch per call: the trailing no-data batch is off, on the
-    // child session only
+    // one micro-batch per call, with no session setting changed: the
+    // trailing no-data batch is skipped by this stream's trigger only
     assert(progress.keySet.asScala === started.asScala)
     assert(progress.values.asScala.forall(_ == 1), progress.asScala.mkString(", "))
     assert(spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") === "true")
