@@ -84,11 +84,12 @@ object RatingsPipeline {
       .select(decode(col("content"), "UTF-8").as("xml"))
       .as[String]
     val raw = XmlRecordSource.read(xmlDocs, "player", SourceFields)
-    // A drop that is one split (one archive) is declared one partition.
-    // `coalesce(1)` of a single partition moves no data, but the planner
-    // then knows the records are in one place, so the report's keyed and
-    // global aggregates run in the parse task with no exchange.
-    val drop = if (raw.rdd.getNumPartitions == 1) raw.coalesce(1) else raw
+    // A drop of one archive is one split (`binaryFile` never splits a
+    // file), so it is declared one partition. `coalesce(1)` of a single
+    // partition moves no data, but the planner then knows the records
+    // are in one place, so the report's keyed and global aggregates run
+    // in the parse task with no exchange.
+    val drop = if (xmlDocs.inputFiles.length == 1) raw.coalesce(1) else raw
     val conformed = conform(drop, periodYear, periodMonth)
     val report = Validate.report("ratings", conformed, RatingRules)
     PartitionedWriter.write(conformed, lakePath, Seq("period_year", "period_month"),
