@@ -72,11 +72,11 @@ object GraftSession {
     * per-child-session stop event, so the host must say when one is
     * done. A full SparkContext stop purges
     * them automatically (listener-driven); this is only for sessions
-    * retired UNDER a live context. The trainer caches (k-means
-    * centroids, PQ codebooks, PCA models) are deliberately untouched:
-    * they hold small plain arrays keyed by plan semantics, reference
-    * no session, and their cross-session reuse of deterministic
-    * content is the point. */
+    * retired UNDER a live context. The JVM-wide value memo
+    * ([[graft.operators.PlanCache.valueMemo]]: counts, centroids,
+    * codebooks, PCA models, merge tables) is deliberately untouched:
+    * its values reference no session, and their cross-session reuse
+    * of deterministic content is the point. */
   def onSessionEnd(spark: SparkSession): Unit =
     graft.operators.PlanCache.onSessionEnd(spark)
 }

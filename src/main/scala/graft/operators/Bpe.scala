@@ -31,21 +31,17 @@ object Bpe {
     * `docs(textCol)`. `nMerges` rounds over the frequency-capped word
     * table; each round costs one aggregate action (pair argmax) and a
     * map-only merge application, with a lazy per-round checkpoint so
-    * lineage stays flat. */
-  /** Per-JVM merge-table memo — tokenizer training is "train once,
-    * encode everywhere": vocab and encode queries over the same corpus
-    * share one training. Transparent because the merge sequence is
-    * deterministic (argmax with lexicographic tie-break over exact
-    * integer counts); keyed on the analyzed plan's semantic hash, so a
-    * different source/filter/partitioning retrains. */
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, String, Int), Seq[(Int, String, String, String, Long)]]()
-
+    * lineage stays flat.
+    *
+    * Memoized through [[PlanCache.valueMemo]] — tokenizer training is
+    * "train once, encode everywhere": vocab and encode queries over the
+    * same corpus share one training. Transparent because the merge
+    * sequence is deterministic (argmax with lexicographic tie-break over
+    * exact integer counts). */
   def trainMerges(docs: DataFrame, nMerges: Int, textCol: String = "text",
                   maxVocab: Int = 50000): Seq[(Int, String, String, String, Long)] =
-    mergeCache.computeIfAbsent(
-      (docs.queryExecution.analyzed.semanticHash(), nMerges, textCol, maxVocab),
-      _ => trainMergesUncached(docs, nMerges, textCol, maxVocab))
+    PlanCache.valueMemo(docs, s"bpe:$nMerges:$textCol:$maxVocab")(
+      trainMergesUncached(docs, nMerges, textCol, maxVocab))
 
   /** Rounds (Spark actions) taken by the most recent vocabulary
     * training — exposed so the batching spec can assert the driver

@@ -34,15 +34,10 @@ object Pca {
 
   private val Fp = 16777216.0 // 2^24 fixed-point scale
 
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int), Model]()
-
-  /** Fit the top-`r` principal components (memoized per analyzed plan,
-    * same contract as the k-means/PQ trainer caches). */
+  /** Fit the top-`r` principal components (memoized per analyzed plan
+    * through [[PlanCache.valueMemo]], like the k-means/PQ trainers). */
   def fit(corpus: DataFrame, r: Int): Model =
-    modelCache.computeIfAbsent(
-      (corpus.queryExecution.analyzed.semanticHash().toLong, r),
-      _ => train(corpus, r))
+    PlanCache.valueMemo(corpus, s"pca:$r")(train(corpus, r))
 
   private def train(corpus: DataFrame, r: Int): Model = {
     val spark = corpus.sparkSession
@@ -217,14 +212,15 @@ object Pca {
     * float32 and mean/eigvals double — both round-trip parquet exactly,
     * so a reloaded model is bit-identical to the trained one
     * (spec-asserted, same contract as the IVF quantizer and PQ
-    * codebooks). */
-  private def modelDf(spark: SparkSession, m: Model): DataFrame = {
+    * codebooks). The frozen model is committed and reloaded through
+    * this codec ([[graft.sinks.VersionedTable.frozen]]). */
+  def modelDf(spark: SparkSession, m: Model): DataFrame = {
     import spark.implicits._
     Seq((m.mean.toSeq, m.comps.map(_.toSeq).toSeq, m.eigvals.toSeq, m.n))
       .toDF("mean", "comps", "eigvals", "n")
   }
 
-  private def modelFromDf(df: DataFrame): Model = {
+  def modelFromDf(df: DataFrame): Model = {
     val spark = df.sparkSession
     import spark.implicits._
     val (mean, comps, eigvals, n) = df
@@ -232,22 +228,4 @@ object Pca {
       .as[(Seq[Double], Seq[Seq[Float]], Seq[Double], Long)].head()
     Model(mean.toArray, comps.map(_.toArray).toArray, eigvals.toArray, n)
   }
-
-  /** Commit a fitted model to a [[graft.sinks.VersionedTable]] root if
-    * no version exists yet — the PCA member of the frozen-trained-state
-    * family ([[Similarity.commitCentroidsIfAbsent]] /
-    * `commitCodebooksIfAbsent`): the model is fitted ONCE and frozen
-    * (refitting would silently re-base every stored projection), the
-    * commit is staging + atomic rename so racing first-time trainers
-    * are safe (identical deterministic content — one wins, the rest
-    * read it back), and serving always projects against version 0. */
-  def commitModelIfAbsent(spark: SparkSession, root: String)(train: => Model): Unit =
-    if (graft.sinks.VersionedTable.latestVersion(spark, root).isEmpty) {
-      graft.sinks.VersionedTable.commit(modelDf(spark, train).coalesce(1), root)
-      ()
-    }
-
-  /** The FROZEN model: always version 0 (first-ever commit). */
-  def readCommittedModel(spark: SparkSession, root: String): Model =
-    modelFromDf(graft.sinks.VersionedTable.read(spark, root, Some(0L)))
 }

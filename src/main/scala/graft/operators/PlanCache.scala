@@ -2,13 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped memoizer for derived tables shared across queries:
-  * a named derivation is built and pinned once, and every later
-  * consumer in the same session reuses the materialized blocks instead
-  * of re-deriving (the graph family alone repeated ~3-4 s of shared
-  * edge derivation per query at sf0.1 before this). It is graft's only
-  * DataFrame memo: query families and the CC label tables of
-  * [[Dedup.connectedComponents]] share it.
+/** graft's one memo, in two halves.
+  *
+  * DataFrames, per session ([[memo]]): a named derivation shared across
+  * queries is built and pinned once, and every later consumer in the
+  * same session reuses the materialized blocks instead of re-deriving
+  * (the graph family alone repeated ~3-4 s of shared edge derivation
+  * per query at sf0.1 before this). Query families and the CC label
+  * tables of [[Dedup.connectedComponents]] share it.
+  *
+  * Values, JVM-wide ([[valueMemo]]): small plain values derived from a
+  * corpus — row counts, distinct estimates, k-means centroids, PQ
+  * codebooks, PCA models, BPE merge tables — keyed on the analyzed
+  * plan and a parameter tag. They reference no session, so they
+  * outlive one, and their cross-session reuse of deterministic content
+  * is the point.
   *
   * The caller pins what it stores, through [[Pin]]: `.pin(false)` (a
   * lazy checkpoint, local or reliable per `spark.graft.checkpoint.reliable`)
@@ -101,22 +109,32 @@ object PlanCache {
     }
   }
 
-  /** Per-JVM memo of corpus-level SCALARS (row counts, distinct
-    * estimates) keyed on the analyzed plan's semantic hash + a caller
-    * tag — the scalar twin of [[memo]], with the same staleness
-    * contract as Spark's own table cache (a rewrite behind an
-    * unchanged plan is not detected within the JVM; this library's
-    * lake mutators go through VersionedTable roots, whose paths change
-    * the plan). Exists because adaptive operating points (LSH plane
-    * counts, IVF centroid counts, sketch budgets) each need one cheap
-    * corpus statistic: deriving it per call re-scans the corpus every
-    * run, and compositions (classify-over-topk) would pay it twice. */
-  private val scalars =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), Long]()
+  /** Per-JVM memo of values derived from a corpus, keyed on the
+    * analyzed plan's semantic hash and a tag that names the derivation
+    * and carries its parameters (`s"kmeans:$k:$iters:$maxRows"`) — the
+    * value twin of [[memo]]. A different source, filter or even
+    * partitioning is a different plan, so it recomputes. Same staleness
+    * contract as Spark's own table cache: a rewrite behind an unchanged
+    * plan is not detected within the JVM (this library's lake mutators
+    * go through VersionedTable roots, whose paths change the plan).
+    *
+    * Computed outside the map — get, compute, putIfAbsent — so a
+    * `compute` may itself call [[valueMemo]] (k-means training derives
+    * its sample rate from [[countMemo]]); computing inside
+    * ConcurrentHashMap's own compute methods throws "Recursive update"
+    * when a nested key shares the outer key's bin. A racing duplicate
+    * compute is deterministic and benign, as in [[memo]]; the first
+    * value stored wins. */
+  private val values =
+    new java.util.concurrent.ConcurrentHashMap[(Int, String), Any]()
 
-  def scalarMemo(df: DataFrame, tag: String)(compute: => Long): Long =
-    scalars.computeIfAbsent(
-      (df.queryExecution.analyzed.semanticHash(), tag), _ => compute)
+  def valueMemo[T](df: DataFrame, tag: String)(compute: => T): T = {
+    val k = (df.queryExecution.analyzed.semanticHash(), tag)
+    Option(values.get(k)).getOrElse {
+      val v = compute
+      Option(values.putIfAbsent(k, v)).getOrElse(v)
+    }.asInstanceOf[T]
+  }
 
   /** Memoized `df.count()` — the one corpus statistic every adaptive
     * grid needs. EAGER on first touch (an action inside what is
@@ -127,7 +145,7 @@ object PlanCache {
       "adaptive operating points need a batch corpus: deriving the grid " +
         "runs an eager count(), which a streaming DataFrame cannot serve — " +
         "pass an explicit grid parameter instead")
-    scalarMemo(df, "count")(df.count())
+    valueMemo(df, "count")(df.count())
   }
 
   /** Drop and release every memoized derivation (e.g. after an

@@ -155,19 +155,17 @@ object Similarity {
     * posexplode + hash aggregation on (cid, pos) with map-side partial
     * combine, so the shuffle carries k*dim partial sums per task, not
     * rows. Centroids themselves are tiny by definition and are collected
-    * per round, which also truncates the iteration lineage. */
-  /** Per-JVM centroid memo — IVF index construction is "train once,
-    * probe many": the three IVF-family queries (topK, SQ8-composed,
-    * classify) share one training when given the same corpus plan and
-    * parameters. Safe because centroids are BIT-stable (deterministic
-    * sample + order-independent fixed-point mean, spec-asserted), so a
-    * cache hit returns exactly what retraining would. Keyed on the
-    * ANALYZED plan's semantic hash: a different source path, filter, or
-    * even partitioning yields a different key and retrains. Same
-    * staleness contract as Spark's own table cache (a rewrite behind an
-    * unchanged plan is not detected within the JVM). */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Long), Array[Array[Float]]]()
+    * per round, which also truncates the iteration lineage.
+    *
+    * Memoized through [[PlanCache.valueMemo]] — "train once, probe
+    * many": the IVF-family queries (topK, SQ8-composed, classify) share
+    * one training per corpus plan and parameters. A hit returns exactly
+    * what retraining would, because the centroids are BIT-stable
+    * (deterministic sample + order-independent fixed-point mean). */
+  def kmeansCentroids(corpus: DataFrame, nCentroids: Int, iters: Int = 3,
+                      maxTrainRows: Long = 100000L): Array[Array[Float]] =
+    PlanCache.valueMemo(corpus, s"kmeans:$nCentroids:$iters:$maxTrainRows")(
+      trainKmeansCentroids(corpus, nCentroids, iters, maxTrainRows))
 
   /** Corpus-adaptive centroid count: k = ceil(sqrt(n)) from the
     * memoized corpus count, floor 16 — the FAISS-shaped nlist ~ sqrt(n)
@@ -197,12 +195,6 @@ object Similarity {
     * fewer degenerates to seed-echo), still a bounded driver-side
     * sample. */
   def trainRowsFor(k: Int): Long = math.max(100000L, 20L * k)
-
-  def kmeansCentroids(corpus: DataFrame, nCentroids: Int, iters: Int = 3,
-                      maxTrainRows: Long = 100000L): Array[Array[Float]] =
-    centroidCache.computeIfAbsent(
-      (corpus.queryExecution.analyzed.semanticHash(), nCentroids, iters, maxTrainRows),
-      _ => trainKmeansCentroids(corpus, nCentroids, iters, maxTrainRows))
 
   private def trainKmeansCentroids(corpus: DataFrame, nCentroids: Int, iters: Int,
                                    maxTrainRows: Long): Array[Array[Float]] = {
@@ -459,23 +451,18 @@ object Similarity {
     exactRescore(queries, corpus, shortlist, k)
   }
 
-  /** Per-JVM PQ codebook memo (same contract as `centroidCache`:
-    * deterministic training, keyed on the analyzed plan + params). */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int, Int, Long), Array[Array[Array[Float]]]]()
-
   /** Product-quantization codebooks: `nSub` subspaces, each with its own
     * `nCodes`-centroid k-means codebook trained by Lloyd iterations on a
     * deterministic hash-bounded sample. Training is DRIVER-side over the
     * bounded sample (the documented train-on-sample design: at 100 TB
     * you never iterate Lloyd distributedly over 10^11 vectors; the
     * sample collect is <= maxTrainRows rows once, and driver arithmetic
-    * is trivially bit-stable). Encoding and search stay distributed. */
+    * is trivially bit-stable). Encoding and search stay distributed.
+    * Memoized like [[kmeansCentroids]]. */
   def pqCodebooks(corpus: DataFrame, nSub: Int, nCodes: Int,
                   kmeansIters: Int = 4, maxTrainRows: Long = 20000L): Array[Array[Array[Float]]] =
-    pqCache.computeIfAbsent(
-      (corpus.queryExecution.analyzed.semanticHash().toLong, nSub, nCodes, kmeansIters, maxTrainRows),
-      _ => trainPqCodebooks(corpus, nSub, nCodes, kmeansIters, maxTrainRows))
+    PlanCache.valueMemo(corpus, s"pq:$nSub:$nCodes:$kmeansIters:$maxTrainRows")(
+      trainPqCodebooks(corpus, nSub, nCodes, kmeansIters, maxTrainRows))
 
   private def trainPqCodebooks(corpus: DataFrame, nSub: Int, nCodes: Int,
                                kmeansIters: Int, maxTrainRows: Long): Array[Array[Array[Float]]] = {
@@ -891,52 +878,35 @@ object Similarity {
     centroidsFromDf(spark.read.parquet(path))
   }
 
-  private def centroidsDf(spark: org.apache.spark.sql.SparkSession,
-                          cents: Array[Array[Float]]): DataFrame = {
+  /** A quantizer as a lake table, one row per centroid — the codec a
+    * frozen quantizer ([[graft.sinks.VersionedTable.frozen]]) is
+    * stored and reloaded through. */
+  def centroidsDf(spark: org.apache.spark.sql.SparkSession,
+                  cents: Array[Array[Float]]): DataFrame = {
     import spark.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cid", "embedding")
   }
 
-  private def centroidsFromDf(df: DataFrame): Array[Array[Float]] = {
+  def centroidsFromDf(df: DataFrame): Array[Array[Float]] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.orderBy(col("cid"))
       .select(col("embedding")).as[Seq[Float]].collect().map(_.toArray)
   }
 
-  /** Commit a quantizer to a [[graft.sinks.VersionedTable]] root if no
-    * version exists yet — write-to-staging + atomic rename, so a
-    * half-written quantizer is never visible and concurrent first-time
-    * trainers race safely (one wins, the rest read it back). No-op
-    * when a version is already committed: the quantizer is trained
-    * ONCE and frozen; retraining would silently re-bucket history. */
-  def commitCentroidsIfAbsent(spark: org.apache.spark.sql.SparkSession,
-                              root: String)(train: => Array[Array[Float]]): Unit =
-    if (graft.sinks.VersionedTable.latestVersion(spark, root).isEmpty) {
-      graft.sinks.VersionedTable.commit(
-        centroidsDf(spark, train).coalesce(1), root)
-      ()
-    }
-
-  /** The FROZEN quantizer: always version 0 — the first-ever commit —
-    * regardless of any later (erroneous) commits to the same root. */
-  def readCommittedCentroids(spark: org.apache.spark.sql.SparkSession,
-                             root: String): Array[Array[Float]] =
-    centroidsFromDf(graft.sinks.VersionedTable.read(spark, root, Some(0L)))
-
   /** PQ codebooks as a lake table: one row per (sub, code, vector).
     * Float32 round-trips parquet exactly, so a reloaded codebook is
     * bit-identical to the trained one (spec-asserted, same contract as
     * the IVF quantizer). */
-  private def codebooksDf(spark: org.apache.spark.sql.SparkSession,
-                          books: Array[Array[Array[Float]]]): DataFrame = {
+  def codebooksDf(spark: org.apache.spark.sql.SparkSession,
+                  books: Array[Array[Array[Float]]]): DataFrame = {
     import spark.implicits._
     (for { (book, s) <- books.zipWithIndex; (cv, c) <- book.zipWithIndex }
       yield (s, c, cv.toSeq)).toSeq.toDF("sub", "code", "vec")
   }
 
-  private def codebooksFromDf(df: DataFrame): Array[Array[Array[Float]]] = {
+  def codebooksFromDf(df: DataFrame): Array[Array[Array[Float]]] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col("sub"), col("code"), col("vec"))
@@ -944,25 +914,6 @@ object Similarity {
       .groupBy(_._1).toArray.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3.toArray))
   }
-
-  /** Commit trained PQ codebooks to a [[graft.sinks.VersionedTable]]
-    * root if no version exists yet — the PQ twin of
-    * [[commitCentroidsIfAbsent]]: codebooks are trained ONCE and
-    * frozen (re-training would silently re-code history), and the
-    * commit is staging + atomic rename so racing first-time trainers
-    * are safe. */
-  def commitCodebooksIfAbsent(spark: org.apache.spark.sql.SparkSession,
-                              root: String)(train: => Array[Array[Array[Float]]]): Unit =
-    if (graft.sinks.VersionedTable.latestVersion(spark, root).isEmpty) {
-      graft.sinks.VersionedTable.commit(
-        codebooksDf(spark, train).coalesce(1), root)
-      ()
-    }
-
-  /** The FROZEN codebooks: always version 0 (first-ever commit). */
-  def readCommittedCodebooks(spark: org.apache.spark.sql.SparkSession,
-                             root: String): Array[Array[Array[Float]]] =
-    codebooksFromDf(graft.sinks.VersionedTable.read(spark, root, Some(0L)))
 
   /** Map-only assignment of a vector batch to a (stored) quantizer:
     * centroids ride the plan as literals — no shuffle, no training.

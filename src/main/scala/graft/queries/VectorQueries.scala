@@ -19,12 +19,20 @@ object VectorQueries {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     TableLoader.load(spark, dir, "embeddings")
 
-  /** Lake root of the frozen IVF quantizer (v0 = first-ever commit) —
-    * shared by the batch-incremental ([[annIvfStored]]) and streaming
+  /** The frozen IVF quantizer (v0 = first-ever commit) — shared by the
+    * batch-incremental ([[annIvfStored]]) and streaming
     * ([[annIvfStream]]) index maintainers, which is the point of the
-    * freeze: every consumer assigns against the SAME centroids. */
-  private def ivfCentroidRoot(spark: SparkSession, dir: String): String =
-    graft.sinks.LakeRoot.root(spark, dir, "ivf_cent_v3")
+    * freeze: every consumer assigns against the SAME centroids. The k
+    * the index was CREATED at adapts to the corpus as of index creation
+    * (sqrt(n) lists) and is versioned BY the commit itself: the
+    * quantizer table's row count IS k, so every later serve derives
+    * the same probe width from the reloaded centroids alone. */
+  private def frozenCentroids(spark: SparkSession, dir: String,
+                              all: DataFrame): Array[Array[Float]] =
+    Similarity.centroidsFromDf(graft.sinks.VersionedTable.frozen(
+        spark, graft.sinks.LakeRoot.root(spark, dir, "ivf_cent_v3"))(
+      Similarity.centroidsDf(spark, Similarity.kmeansCentroids(all,
+        Similarity.adaptiveCentroids(graft.operators.PlanCache.countMemo(all)))).coalesce(1)))
 
   /** Exact top-10 neighbors for query vectors (vec_id % 100 == 0). */
   def annBruteForce(spark: SparkSession, dir: String): DataFrame = {
@@ -233,8 +241,8 @@ object VectorQueries {
   /** Incremental IVF over a STORED quantizer — the operational shape a
     * daily embedding drop needs, driven end to end: the quantizer is
     * trained ONCE (on the corpus as of index creation) and COMMITTED
-    * to the lake ([[Similarity.commitCentroidsIfAbsent]] — a
-    * [[graft.sinks.VersionedTable]] commit, staging + atomic rename);
+    * to the lake ([[graft.sinks.VersionedTable.frozen]] — a
+    * VersionedTable commit, staging + atomic rename);
     * every arriving batch — here the two vec_id parity halves — is
     * assigned map-only against the RELOADED frozen centroids (no
     * retraining, no shuffle of history), and search probes the
@@ -255,15 +263,7 @@ object VectorQueries {
     // frozen quantizer is pinned to version 0 (first-ever commit);
     // deterministic k-means makes any racing first-time trainer's
     // content identical anyway.
-    val root = ivfCentroidRoot(spark, dir)
-    // The k the index was CREATED at adapts to the corpus as of index
-    // creation (sqrt(n) lists) and is versioned BY the commit itself:
-    // the quantizer table's row count IS k, so every later serve
-    // derives the same probe width from the reloaded centroids alone.
-    Similarity.commitCentroidsIfAbsent(spark, root)(
-      Similarity.kmeansCentroids(all,
-        Similarity.adaptiveCentroids(graft.operators.PlanCache.countMemo(all))))
-    val cents = Similarity.readCommittedCentroids(spark, root)
+    val cents = frozenCentroids(spark, dir, all)
     // Two arrival batches assigned independently map-only — the union
     // IS the incrementally-built index (spec'd equal to a full rebuild).
     val lists = Similarity.assignToCentroids(all.where(col("vec_id") % 2 === 0), cents)
@@ -276,10 +276,10 @@ object VectorQueries {
     * closing the same build-once/commit/reload/encode-map-only/serve
     * lifecycle as the stored IVF quantizer ([[annIvfStored]]) and the
     * stored lexical index (`text_bm25_inc`): PQ codebooks are trained
-    * ONCE and committed to the lake ([[Similarity
-    * .commitCodebooksIfAbsent]] — a VersionedTable commit, staging +
-    * atomic rename); each arriving batch (the two vec_id parity
-    * halves) is ENCODED map-only against the RELOADED frozen codebooks
+    * ONCE and committed to the lake ([[graft.sinks.VersionedTable
+    * .frozen]] — a VersionedTable commit, staging + atomic rename);
+    * each arriving batch (the two vec_id parity halves) is ENCODED
+    * map-only against the RELOADED frozen codebooks
     * (literal plan constants — no retraining, no shuffle, ~16 bytes
     * per vector landed); search runs ADC over the accumulated code
     * table with only the shortlist rescored on floats
@@ -293,9 +293,9 @@ object VectorQueries {
   def annPqStored(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir)
     val root = graft.sinks.LakeRoot.root(spark, dir, "pq_books_v1")
-    Similarity.commitCodebooksIfAbsent(spark, root)(
-      Similarity.pqCodebooks(all, nSub = 8, nCodes = 32))
-    val books = Similarity.readCommittedCodebooks(spark, root)
+    val books = Similarity.codebooksFromDf(graft.sinks.VersionedTable.frozen(spark, root)(
+      Similarity.codebooksDf(spark, Similarity.pqCodebooks(all, nSub = 8, nCodes = 32))
+        .coalesce(1)))
     // Materialized like ivfPqTopK's cq: fusing the literal-codebook
     // encode into the ADC scan stage pushes the generated hot loop
     // past the JIT bytecode budget (interpreted scan). A serving
@@ -335,11 +335,7 @@ object VectorQueries {
     // One frozen quantizer, two consumers: the SAME v0 centroid commit
     // annIvfStored serves from (deterministic k-means makes any racing
     // first-time trainer's content identical).
-    val centRoot = ivfCentroidRoot(spark, dir)
-    Similarity.commitCentroidsIfAbsent(spark, centRoot)(
-      Similarity.kmeansCentroids(all,
-        Similarity.adaptiveCentroids(graft.operators.PlanCache.countMemo(all))))
-    val cents = Similarity.readCommittedCentroids(spark, centRoot)
+    val cents = frozenCentroids(spark, dir, all)
     val root = graft.sinks.LakeRoot.child(base, "lists")
     val stream = spark.readStream.schema(TableLoader.schemaOf(spark, src))
       .option("maxFilesPerTrigger", "2").parquet(src)
@@ -351,10 +347,6 @@ object VectorQueries {
     Similarity.ivfTopKStored(all.where(col("vec_id") % 100 === 0), lists, cents, k = 10)
       .orderBy(col("q_id"), col("rnk"))
   }
-
-  /** Lake root of the frozen PCA model (v0 = first-ever commit). */
-  private def pcaModelRoot(spark: SparkSession, dir: String): String =
-    graft.sinks.LakeRoot.root(spark, dir, "pca_model_v1")
 
   /** PCA dimensionality reduction of the embedding corpus (64 -> 8):
     * ONE distributed moment pass (per-partition fixed-point
@@ -380,10 +372,10 @@ object VectorQueries {
     * driver-side eigenvalue. */
   def vecPcaQ(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir)
-    val root = pcaModelRoot(spark, dir)
-    graft.operators.Pca.commitModelIfAbsent(spark, root)(
-      graft.operators.Pca.fit(all, r = 8))
-    val model = graft.operators.Pca.readCommittedModel(spark, root)
+    // The frozen model (v0 = first-ever commit).
+    val root = graft.sinks.LakeRoot.root(spark, dir, "pca_model_v1")
+    val model = graft.operators.Pca.modelFromDf(graft.sinks.VersionedTable.frozen(spark, root)(
+      graft.operators.Pca.modelDf(spark, graft.operators.Pca.fit(all, r = 8)).coalesce(1)))
     graft.operators.Pca.project(all, model)
       .orderBy(col("vec_id"), col("comp"))
   }

@@ -21,33 +21,27 @@ object PartitionedWriter {
     p.getFileSystem(hadoopConf).exists(p)
   }
 
+  /** The overwrite mode of every write, fixed so no caller can pick
+    * "static". SAFETY INVARIANT: a read-back-and-overwrite merge
+    * ([[UpsertWriter]]) lazily READS the path it OVERWRITES. That is
+    * safe only under dynamic partition overwrite, which deletes the
+    * replaced partitions at job COMMIT, after the read completed. A
+    * per-write option, not a session conf, so unrelated writes keep
+    * the session default. */
+  private val OverwriteMode = "dynamic"
+
   /** Write partitioned parquet; `overwritePartitions = false` skips the
     * write entirely when the target exists (reference skip semantics),
-    * `true` uses dynamic partition overwrite (idempotent backfill).
-    * `clusterBy` sorts rows within output files so parquet row-group
-    * min/max stats make point/range reads on those columns skip data —
-    * the cheap half of Z-ordering, worth it on every 100 TB lake. */
+    * `true` uses dynamic partition overwrite (idempotent backfill). */
   def write(df: DataFrame, path: String, partitionCols: Seq[String],
-            overwritePartitions: Boolean = true,
-            clusterBy: Seq[String] = Seq.empty,
-            codec: String = "zstd",
-            partitionOverwriteMode: String = "dynamic"): Boolean = {
+            overwritePartitions: Boolean = true): Boolean = {
     if (!overwritePartitions && exists(df, path)) return false
-    val clustered =
-      if (clusterBy.isEmpty) df
-      else df.sortWithinPartitions((partitionCols ++ clusterBy).map(org.apache.spark.sql.functions.col): _*)
-    clustered.write
-      // Per-write option, not a session-conf mutation: the session default
-      // (static overwrite) must survive for unrelated writes. Callers
-      // whose write plan READS the target path (read-back-and-overwrite
-      // merges like UpsertWriter) depend on "dynamic" deferring partition
-      // deletion to job commit — they pass the mode explicitly so the
-      // invariant is enforced where it is relied upon.
-      .option("partitionOverwriteMode", partitionOverwriteMode)
+    df.write
+      .option("partitionOverwriteMode", OverwriteMode)
       // zstd over the default snappy: ~20-30% smaller files at similar
       // scan speed — at 100 TB the bytes on disk and over the wire are
       // the bill, and parquet scan is rarely decompress-bound.
-      .option("compression", codec)
+      .option("compression", "zstd")
       .partitionBy(partitionCols: _*)
       .mode(if (overwritePartitions) "overwrite" else "errorifexists")
       .parquet(path)

@@ -56,13 +56,10 @@ object UpsertWriter {
       .orderBy(col(versionCol).desc, col("_src").desc)
     val winners = merged.withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1).drop("_rn", "_src")
-    // SAFETY INVARIANT: `winners` lazily READS `path` while the write
-    // OVERWRITES `path`. That self-overwrite is only safe under dynamic
-    // partition-overwrite (source partitions are deleted at job COMMIT,
-    // after the read completed) — so the mode is pinned here, at the
-    // site that relies on it, not inherited from the writer's default.
-    PartitionedWriter.write(winners, path, partitionCols,
-      partitionOverwriteMode = "dynamic")
+    // `winners` reads `path` while the write overwrites it: safe
+    // because PartitionedWriter always overwrites dynamically (see its
+    // OverwriteMode).
+    PartitionedWriter.write(winners, path, partitionCols)
     touchedCount
   }
 }

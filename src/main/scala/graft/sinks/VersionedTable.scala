@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   * atomic rename need their usual rename-committer arrangement —
   * cited as the same caveat Spark's own output committers carry).
   *
+  * [[frozen]] is the build-once form: commit v0 if the root is
+  * empty, then always serve v0.
+  *
   * Scale shape: `read(version)` is an ordinary pruned parquet scan of
   * one version directory; `latestVersion` is a LISTING of version
   * directories (one RPC per commit ever made — compact rarely-read
@@ -136,6 +139,20 @@ object VersionedTable {
     f.delete(staging, true)
     throw new IllegalStateException(
       s"lost $maxAttempts commit races on $root — giving up")
+  }
+
+  /** Frozen state — trained or derived once, never rebuilt: commits
+    * `build` as v0 only when `root` has no version yet, and always
+    * returns v0, the first-ever commit. Rebuilding would silently
+    * re-bucket or re-base everything stored against the state, so a
+    * later commit to the same root is never served, and neither is the
+    * renumbered duplicate of a first-time builder that lost the commit
+    * race (deterministic builders make both contents identical). The
+    * one policy behind the stored quantizers, codebooks, PCA model and
+    * dedup / decontamination fixtures. */
+  def frozen(spark: SparkSession, root: String)(build: => DataFrame): DataFrame = {
+    if (versions(spark, root).isEmpty) commit(build, root)
+    read(spark, root, Some(0L))
   }
 
   /** Read a pinned version (latest when `version` is None). */

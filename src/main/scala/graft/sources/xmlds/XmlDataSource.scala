@@ -134,8 +134,11 @@ class XmlScan(readSchema: StructType, tag: String, files: Seq[Path],
   override def planInputPartitions(): Array[InputPartition] =
     files.map(p => XmlFilePartition(p.toString): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
+    // The conf that listed and inferred the files, so a filesystem
+    // option set on the session (credentials, `fs.<scheme>.impl`)
+    // reaches the reader too.
     new XmlReaderFactory(readSchema.fieldNames, tag,
-      SparkSession.active.sparkContext.hadoopConfiguration.iterator().asScala
+      SparkSession.active.sessionState.newHadoopConf().iterator().asScala
         .map(e => e.getKey -> e.getValue).toMap, pushed)
 }
 

@@ -102,9 +102,9 @@ class IndexStreamSpec extends SparkSpec {
     // ivfTopK derives (k = ceil(sqrt(n))), so served == plain holds.
     val kc = Similarity.adaptiveCentroids(
       graft.operators.PlanCache.countMemo(all))
-    Similarity.commitCentroidsIfAbsent(spark, s"$tmp/cents")(
-      Similarity.kmeansCentroids(all, kc, 3, Similarity.trainRowsFor(kc)))
-    val cents = Similarity.readCommittedCentroids(spark, s"$tmp/cents")
+    val cents = Similarity.centroidsFromDf(VersionedTable.frozen(spark, s"$tmp/cents")(
+      Similarity.centroidsDf(spark,
+        Similarity.kmeansCentroids(all, kc, 3, Similarity.trainRowsFor(kc)))))
     def stream = spark.readStream.schema(spark.read.parquet(src).schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
 

@@ -82,11 +82,8 @@ class PcaSpec extends SparkSpec {
     val root = new java.io.File(
       java.nio.file.Files.createTempDirectory("graft_pca_model").toFile,
       "model").getAbsolutePath
-    Pca.commitModelIfAbsent(spark, root)(model)
-    // Freeze: a second commit attempt is a no-op.
-    Pca.commitModelIfAbsent(spark, root)(
-      sys.error("must not retrain once committed"))
-    val back = Pca.readCommittedModel(spark, root)
+    val back = Pca.modelFromDf(
+      graft.sinks.VersionedTable.frozen(spark, root)(Pca.modelDf(spark, model)))
     // float32 comps and double mean/eigvals round-trip parquet exactly.
     assert(back.n === model.n)
     assert(back.mean.sameElements(model.mean))

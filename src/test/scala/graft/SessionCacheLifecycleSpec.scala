@@ -59,6 +59,20 @@ class SessionCacheLifecycleSpec extends SparkSpec {
     PlanCache.clear()
   }
 
+  test("valueMemo may be called inside another valueMemo's compute") {
+    // k-means training reads countMemo inside its own compute. A nested
+    // insert into a map that is computing a key throws "Recursive
+    // update" once it lands in that key's bin; 64 nested keys make that
+    // certain for such a map.
+    val df = spark.range(7919).toDF("nested_memo")
+    val outer = PlanCache.valueMemo(df, "nested:outer") {
+      (0 until 64).map(i => PlanCache.valueMemo(df, s"nested:inner:$i")(i.toLong)).sum
+    }
+    assert(outer === (0 until 64).sum)
+    assert(PlanCache.valueMemo[Long](df, "nested:outer")(fail("outer value was not memoized")) === outer)
+    assert(PlanCache.valueMemo[Long](df, "nested:inner:7")(fail("inner value was not memoized")) === 7L)
+  }
+
   test("clear releases a persisted entry's cached blocks") {
     import graft.operators.Pin.PinOps
     PlanCache.clear()

@@ -361,29 +361,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.85, s"recall=$recall at nPlanes=16")
   }
 
-  test("versioned quantizer commit: train-once no-op and v0 pinning") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_vt").toString + "/quantizer"
-    val trained = Similarity.kmeansCentroids(emb, nCentroids = 8)
-    var trainings = 0
-    Similarity.commitCentroidsIfAbsent(spark, root) { trainings += 1; trained }
-    assert(trainings === 1)
-    // a second commit attempt must NOT retrain: the quantizer is frozen
-    Similarity.commitCentroidsIfAbsent(spark, root) {
-      trainings += 1; Similarity.kmeansCentroids(emb, nCentroids = 4)
-    }
-    assert(trainings === 1, "commitCentroidsIfAbsent retrained over an existing version")
-    val loaded = Similarity.readCommittedCentroids(spark, root)
-    assert(loaded.length === trained.length)
-    assert(loaded.zip(trained).forall { case (a, b) => a.sameElements(b) })
-    // even if someone force-commits a later version, readers stay on v0
-    graft.sinks.VersionedTable.commit(
-      spark.range(4).selectExpr("cast(id as int) cid",
-        "array(cast(id as float)) embedding"), root)
-    val pinned = Similarity.readCommittedCentroids(spark, root)
-    assert(pinned.zip(trained).forall { case (a, b) => a.sameElements(b) },
-      "readCommittedCentroids must pin version 0, not latest")
-  }
-
   test("stored quantizer: save/load is bit-exact and incremental indexing equals a rebuild") {
     val root = java.nio.file.Files.createTempDirectory("graft_ivf_store").toString + "/quantizer"
     val trained = Similarity.kmeansCentroids(emb, nCentroids = 16)
@@ -446,8 +423,8 @@ class SimilaritySpec extends SparkSpec {
     // returns EXACTLY plain PQ's rows.
     val root = java.nio.file.Files.createTempDirectory("graft_pq_store").toString + "/books"
     val trained = Similarity.pqCodebooks(emb, nSub = 8, nCodes = 32)
-    Similarity.commitCodebooksIfAbsent(spark, root)(trained)
-    val loaded = Similarity.readCommittedCodebooks(spark, root)
+    val loaded = Similarity.codebooksFromDf(graft.sinks.VersionedTable.frozen(spark, root)(
+      Similarity.codebooksDf(spark, trained)))
     assert(loaded.length === trained.length)
     assert(loaded.zip(trained).forall { case (bs, bt) =>
       bs.zip(bt).forall { case (a, b) => a.sameElements(b) } })
@@ -469,13 +446,6 @@ class SimilaritySpec extends SparkSpec {
     assert(!other.zip(loaded).forall { case (bs, bt) =>
       bs.zip(bt).forall { case (a, b) => a.sameElements(b) } },
       "differently-sampled training must produce different codebooks")
-
-    // The commit is if-absent: a second (would-be retraining) commit is
-    // a no-op and the served books stay pinned at version 0.
-    Similarity.commitCodebooksIfAbsent(spark, root)(other)
-    val pinned = Similarity.readCommittedCodebooks(spark, root)
-    assert(pinned.zip(loaded).forall { case (bs, bt) =>
-      bs.zip(bt).forall { case (a, b) => a.sameElements(b) } })
   }
 
   test("clusterStats partitions the corpus and clusters cohere above the corpus-wide pairwise mean") {

@@ -48,19 +48,6 @@ class SourcesSpec extends SparkSpec {
     assert(got === Set(("inner.txt", "hello zip")))
   }
 
-  test("PartitionedWriter clusterBy sorts rows within output files") {
-    val out = Files.createTempDirectory("graftclust").toFile.getAbsolutePath + "/t"
-    val df = spark.read.parquet(s"$Sf/orders.parquet")
-      .select(col("o_orderkey"), col("o_orderstatus"))
-    assert(graft.sinks.PartitionedWriter.write(df, out, Seq("o_orderstatus"),
-      clusterBy = Seq("o_orderkey")))
-    val dir = new File(s"$out/o_orderstatus=O")
-    val file = dir.listFiles().filter(_.getName.endsWith(".parquet")).head
-    val keys = spark.read.parquet(file.getAbsolutePath)
-      .select("o_orderkey").collect().map(_.getLong(0)).toSeq
-    assert(keys === keys.sorted, "rows in file not clustered")
-  }
-
   test("PartitionedWriter writes per-partition dirs and honors skip-if-exists") {
     val out = Files.createTempDirectory("graftlake").toFile.getAbsolutePath + "/t"
     val df = Seq((1, "2024", "01"), (2, "2024", "02")).toDF("v", "y", "m")

@@ -38,6 +38,23 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.diff(spark, root, 1L, 2L, Seq("id")).count() === 0L)
   }
 
+  test("frozen commits v0 once, never rebuilds, and serves v0 after a later commit") {
+    val root = java.nio.file.Files.createTempDirectory("graft_vt_frozen").toString + "/state"
+    val v0 = Seq((1L, "a"), (2L, "b"))
+    var builds = 0
+    def state() = VersionedTable.frozen(spark, root) { builds += 1; v0.toDF("id", "s") }
+    // An empty root commits the build as v0.
+    assert(state().as[(Long, String)].collect().toSet === v0.toSet)
+    assert(VersionedTable.versions(spark, root) === Seq(0L))
+    // Once a version exists, the build is not evaluated.
+    assert(state().as[(Long, String)].collect().toSet === v0.toSet)
+    assert(builds === 1)
+    // A later commit to the same root is never served.
+    VersionedTable.commit(Seq((3L, "c")).toDF("id", "s"), root)
+    assert(state().as[(Long, String)].collect().toSet === v0.toSet)
+    assert(builds === 1)
+  }
+
   test("readAll unions every version in one partition-discovered scan; upTo pins a snapshot") {
     val root = java.nio.file.Files.createTempDirectory("graft_vt_ra").toString + "/table"
     val a = Seq((1L, 10L), (2L, 20L))

@@ -60,4 +60,28 @@ class XmlDataSourceSpec extends SparkSpec {
     // unsupported predicates (e.g. startsWith) still work via residual evaluation
     assert(base.where(col("name").startsWith("Al")).count() === 1)
   }
+
+  test("DSv2 graft-xml: a filesystem set only on the session lists, infers and reads") {
+    val dir = Files.createTempDirectory("xmlds4").toFile
+    writeXml(dir, "a.xml", Seq(
+      Seq("fideid" -> "1", "name" -> "Alice"), Seq("fideid" -> "2", "name" -> "Bob")))
+    val session = spark.newSession()
+    session.conf.set("fs.graftlocal.impl", classOf[GraftLocalFs].getName)
+    // Uncached, so the reader cannot pick up the instance the listing made.
+    session.conf.set("fs.graftlocal.impl.disable.cache", "true")
+    org.apache.spark.sql.SparkSession.setActiveSession(session)
+    try {
+      val df = session.read.format("graft-xml").option("recordTag", "player")
+        .load(s"graftlocal://${dir.getAbsolutePath}/*.xml")
+      assert(df.columns.toSeq === Seq("fideid", "name"))
+      assert(df.select("fideid").collect().map(_.getString(0)).sorted.toSeq === Seq("1", "2"))
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+  }
+}
+
+/** The local filesystem under the made-up scheme `graftlocal`, which no
+  * Hadoop conf names unless a session sets `fs.graftlocal.impl`. */
+class GraftLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftlocal:///")
+  override def getScheme: String = "graftlocal"
 }
