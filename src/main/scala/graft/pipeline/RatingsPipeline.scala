@@ -6,22 +6,22 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.operators.{Conform, ConformSpec, Validate, Windows}
 import graft.sinks.PartitionedWriter
-import graft.sources.{XmlRecordSource, ZipSource}
+import graft.sources.xmlds.XmlDataSource
 
 /** End-to-end re-expression of the reference's ingest flow
-  * (/root/reference/prefect/flows/ingest_web_to_gcs.py:180-200
-  * `ingest_single_month_web_to_gcs`): zipped XML ratings files ->
-  * distributed parse -> schema conformance (rename/cast/code-map/
-  * add-missing, ingest_web_to_gcs.py:100-135) -> declarative validation
-  * (chess_ratings_data_model.py:9-31) -> idempotent period-partitioned
-  * parquet lake -> leaderboard analytics.
+  * (`ingest_web_to_gcs.py:180-200`, `ingest_single_month_web_to_gcs`):
+  * zipped XML ratings files -> distributed parse -> schema conformance
+  * (rename/cast/code-map/add-missing, ingest_web_to_gcs.py:100-135) ->
+  * declarative validation (chess_ratings_data_model.py:9-31) ->
+  * idempotent period-partitioned parquet lake -> leaderboard analytics.
   *
   * Differences from the reference are all scale-driven: the zip/XML
-  * work happens per partition on executors (no driver download/pandas
-  * funnel), validation returns a violations report instead of a
-  * driver-side assert, and idempotency is dynamic partition overwrite
-  * instead of list-blobs-then-skip (no O(objects) driver listing).
-  * Lake reads declare [[lakeSchema]], so serving the lake runs no
+  * work happens per file on executors, through the `graft-xml` source
+  * (no driver download/pandas funnel), validation returns a violations
+  * report instead of a driver-side assert, and idempotency is dynamic
+  * partition overwrite instead of list-blobs-then-skip (no O(objects)
+  * driver listing). The drop is read with its string schema declared
+  * and lake reads declare [[lakeSchema]], so neither runs a
   * schema-inference job.
   */
 object RatingsPipeline {
@@ -44,9 +44,10 @@ object RatingsPipeline {
     // violation nor used in age math (reference preprocess semantics).
     nullIf = Map("birthday" -> "0"))
 
-  /** The string fields the zip path parses from each `<player>` record. */
-  private val SourceFields: Seq[String] =
+  /** The string fields `ingestPeriod` reads from each `<player>` record. */
+  private val SourceSchema: StructType = StructType(
     Seq("fideid", "name", "country", "sex", "title", "rating", "games", "k", "birthday")
+      .map(StructField(_, StringType)))
 
   private def conform(raw: DataFrame, periodYear: Int, periodMonth: Int): DataFrame =
     Conform(raw, ConformRatings.copy(enrich = Seq(
@@ -60,8 +61,7 @@ object RatingsPipeline {
     * lake: it is keyed on the file listing, which each period's write
     * changes. */
   def lakeSchema(spark: SparkSession): StructType = {
-    val raw = spark.createDataFrame(java.util.Collections.emptyList[Row](),
-      StructType(SourceFields.map(StructField(_, StringType))))
+    val raw = spark.createDataFrame(java.util.Collections.emptyList[Row](), SourceSchema)
     StructType(conform(raw, 0, 0).schema.map(_.copy(nullable = true)))
   }
 
@@ -72,25 +72,23 @@ object RatingsPipeline {
     Validate.Range("birth_year", 1900, 2026),
     Validate.Range("period_month", 1, 12))
 
-  /** Ingest one period's zipped XML archives into the lake. Returns the
-    * validation report. `overwrite=false` reproduces the reference's
-    * skip-if-exists; `true` is an idempotent partition backfill. */
+  /** Ingest one period's ratings drop into the lake: every file the glob
+    * names, each a zip archive of XML files or a plain XML file, read
+    * through `graft-xml`. Returns the validation report.
+    * `overwrite=false` reproduces the reference's skip-if-exists; `true`
+    * is an idempotent partition backfill. */
   def ingestPeriod(spark: SparkSession, zipGlob: String, lakePath: String,
                    periodYear: Int, periodMonth: Int,
                    overwrite: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val xmlDocs = ZipSource.entries(spark, zipGlob)
-      .where(col("entry").endsWith(".xml"))
-      .select(decode(col("content"), "UTF-8").as("xml"))
-      .as[String]
-    val raw = XmlRecordSource.read(xmlDocs, "player", SourceFields)
-    // A drop of one archive is one split (`binaryFile` never splits a
-    // file), so it is declared one partition. `coalesce(1)` of a single
-    // partition moves no data, but the planner then knows the records
-    // are in one place, so the report's keyed and global aggregates run
-    // in the parse task with no exchange.
-    val drop = if (xmlDocs.inputFiles.length == 1) raw.coalesce(1) else raw
-    val conformed = conform(drop, periodYear, periodMonth)
+    val raw = spark.read.format("graft-xml").schema(SourceSchema)
+      .option("recordTag", "player").load(zipGlob)
+    // graft-xml reads each file in one partition, so a drop of one file
+    // is declared one partition. `coalesce(1)` of a single partition
+    // moves no data, but the planner then knows the records are in one
+    // place, so the report's keyed and global aggregates run in the
+    // parse task with no exchange.
+    val oneFile = XmlDataSource.files(spark.sessionState.newHadoopConf(), zipGlob).length == 1
+    val conformed = conform(if (oneFile) raw.coalesce(1) else raw, periodYear, periodMonth)
     val report = Validate.report("ratings", conformed, RatingRules)
     PartitionedWriter.write(conformed, lakePath, Seq("period_year", "period_month"),
       overwritePartitions = overwrite)
@@ -113,23 +111,6 @@ object RatingsPipeline {
       report = Some(TaskRunner.retry(attempts)(() =>
         ingestPeriod(spark, zipGlob, lakePath, periodYear, periodMonth)))
     }
-    report
-  }
-
-  /** Ingest a directory of plain XML ratings files through the graft-xml
-    * DataSource V2 (schema inference + per-file parallelism + pruning) —
-    * the path for already-unzipped drops. Same conform/validate/write
-    * semantics as ingestPeriod. */
-  def ingestPeriodXmlDir(spark: SparkSession, xmlGlob: String, lakePath: String,
-                         periodYear: Int, periodMonth: Int,
-                         overwrite: Boolean = true): DataFrame = {
-    val raw = spark.read.format("graft-xml")
-      .option("recordTag", "player")
-      .load(xmlGlob)
-    val conformed = conform(raw, periodYear, periodMonth)
-    val report = Validate.report("ratings", conformed, RatingRules)
-    PartitionedWriter.write(conformed, lakePath, Seq("period_year", "period_month"),
-      overwritePartitions = overwrite)
     report
   }
 

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.TableLoader
 
 /** Snapshot-versioned parquet table — the reproducibility primitive a
   * training-data lake needs and plain directories don't give: every
@@ -155,11 +156,14 @@ object VersionedTable {
     read(spark, root, Some(0L))
   }
 
-  /** Read a pinned version (latest when `version` is None). */
+  /** Read a pinned version (latest when `version` is None). A committed
+    * version never changes, so its schema comes from the JVM-wide cache
+    * and a second read of it runs no footer job. */
   def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, root)).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $root"))
-    spark.read.parquet(new Path(root, s"v=$v").toString)
+    val dir = new Path(root, s"v=$v").toString
+    spark.read.schema(TableLoader.schemaOf(spark, dir)).parquet(dir)
   }
 
   /** Every committed version in ONE partition-discovered scan: the

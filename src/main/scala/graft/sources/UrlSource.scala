@@ -7,11 +7,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /** Web → lake fetch adapter — the literal first hop of the reference's
-  * ingest flow (`/root/reference/prefect/flows/ingest_web_to_gcs.py:40-70`,
+  * ingest flow (`ingest_web_to_gcs.py:40-70`,
   * `generate_fide_download_url` + `stream_zip_file`): download a URL's
-  * bytes and land them at a lake path that `ZipSource.entries` /
-  * `binaryFile` already consume, closing the one capability gap the
-  * engine had left external. Deliberately thin and driver-side: the
+  * bytes and land them at a lake path that the `graft-xml` source
+  * (`RatingsPipeline.ingestPeriod`) reads, closing the one capability
+  * gap the engine had left external. Deliberately thin and driver-side: the
   * reference fetches ONE archive per (month, category) — control-plane
   * work — and the data-plane fan-out happens after landing, where
   * executors split the archives. Retries with exponential backoff

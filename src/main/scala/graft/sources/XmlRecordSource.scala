@@ -1,7 +1,7 @@
 package graft.sources
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
-import java.io.StringReader
+import java.io.{Reader, StringReader}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -18,11 +18,15 @@ object XmlRecordSource {
 
   /** Stream-parse one XML document: every `<recordTag>` element becomes a
     * field-name -> text map (flat children only, FIDE ratings-file shape). */
-  def parseRecords(xml: String, recordTag: String): Iterator[Map[String, String]] = {
+  def parseRecords(xml: String, recordTag: String): Iterator[Map[String, String]] =
+    parseRecords(new StringReader(xml), recordTag)
+
+  /** `parseRecords` over a document read from `in`, which it leaves open. */
+  def parseRecords(in: Reader, recordTag: String): Iterator[Map[String, String]] = {
     val factory = XMLInputFactory.newInstance()
     factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val reader = factory.createXMLStreamReader(new StringReader(xml))
+    val reader = factory.createXMLStreamReader(in)
     val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
     var rec: scala.collection.mutable.LinkedHashMap[String, String] = null
     var field: String = null

@@ -122,6 +122,20 @@ class ContractSpec extends SparkSpec {
       assert(queryRun.split(java.util.regex.Pattern.quote(call), -1).length <= 2, call)
   }
 
+  test("graft-xml is the only XML file reader; ingestPeriod is the one ingest body") {
+    // Zipped and plain XML drops both read through the graft-xml source,
+    // so no second file reader or ingest body can drift from it.
+    val reader = Seq("binaryFile", "ZipInputStream", "ZipSource")
+    val offenders = for {
+      p <- Files.walk(repoRoot.resolve("src/main")).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala")
+      (line, i) <- read(p).linesIterator.zipWithIndex
+      if line.contains("ingestPeriodXmlDir") ||
+        (p.getFileName.toString != "XmlDataSource.scala" && reader.exists(line.contains))
+    } yield s"${repoRoot.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("PlanCache.Max holds every memoized query family plus the CC label tables") {
     // One entry per memo call site (each keyed on one dir): a session
     // that touches them all must not evict-thrash its CC label tables.

@@ -55,19 +55,30 @@ class RatingsPipelineSpec extends SparkSpec {
     assert(lb.count(_._1 == "USA") === 2)
   }
 
-  test("ingestPeriodXmlDir: DSv2 path lands the same lake layout") {
+  test("ingestPeriod lands equal lakes and reports from a zipped and an XML drop") {
+    val players = Seq(
+      player(1, "Alice", "USA", "F", 2700, 1990),
+      player(2, "Bob", "GER", "M", 2650, 0),
+      player(2, "Bob-Dup", "GERM", "M", 2651, 1850))
+    val zipDir = Files.createTempDirectory("ratingszips3").toFile
+    writeRatingsZip(zipDir, "mar24.zip", players)
     val xmlDir = Files.createTempDirectory("ratingsxml").toFile
-    val lake = Files.createTempDirectory("ratingslake3").toFile.getAbsolutePath + "/ratings"
     Files.writeString(new File(xmlDir, "mar24.xml").toPath,
-      XmlRecordSource.renderXml("player", Seq(
-        player(1, "Alice", "USA", "F", 2700, 1990).toSeq,
-        player(2, "Bob", "GER", "M", 2650, 1985).toSeq).iterator))
-    RatingsPipeline.ingestPeriodXmlDir(spark, xmlDir.getAbsolutePath + "/*.xml",
-      lake, 2024, 3)
-    val lakeDf = spark.read.parquet(lake)
-    assert(lakeDf.count() === 2)
-    assert(lakeDf.where(col("fide_federation") === "GER").count() === 1)
-    assert(new File(lake + "/period_year=2024/period_month=3").exists())
+      XmlRecordSource.renderXml("player", players.iterator.map(_.toSeq)))
+    val Seq((zipLake, zipReport), (xmlLake, xmlReport)) =
+      Seq(zipDir.getAbsolutePath + "/*.zip", xmlDir.getAbsolutePath + "/*.xml").map { glob =>
+        val lake = Files.createTempDirectory("ratingslake3").toFile.getAbsolutePath + "/ratings"
+        lake -> RatingsPipeline.ingestPeriod(spark, glob, lake, 2024, 3).collect().toSet
+      }
+    assert(zipReport === xmlReport)
+    assert(zipReport.map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap ===
+      Map(("unique", "fide_id") -> 2L, ("not_null", "rating") -> 0L,
+        ("regex", "fide_federation") -> 1L, ("range", "birth_year") -> 1L,
+        ("range", "period_month") -> 0L))
+    val zipRows = spark.read.parquet(zipLake).collect().toSet
+    assert(zipRows.size === 3)
+    assert(zipRows === spark.read.parquet(xmlLake).collect().toSet)
+    assert(new File(xmlLake + "/period_year=2024/period_month=3").exists())
   }
 
   test("birth_year 0 conforms to null, not a range violation") {
@@ -169,7 +180,8 @@ class RatingsPipelineSpec extends SparkSpec {
     assert(jobsOf(QueryRun.digest(report)) <= 3)
     report.collect()
     val leaves = new AdaptiveSparkPlanHelper {}.collectLeaves(report.queryExecution.executedPlan)
-    assert(leaves.map(_.nodeName) === Seq("Scan ExistingRDD"), leaves.mkString("\n"))
+    assert(leaves.size === 1 && leaves.head.nodeName.startsWith("BatchScan graft-xml"),
+      leaves.mkString("\n"))
   }
 
   test("lakeSchema is the lake's inferred schema, and lake reads build with no job") {

@@ -4,7 +4,7 @@ import java.io.{File, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import java.nio.file.Files
 
-import graft.sources.{TableLoader, XmlRecordSource, ZipSource}
+import graft.sources.{TableLoader, XmlRecordSource}
 import graft.sinks.PartitionedWriter
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroup
@@ -35,17 +35,19 @@ class SourcesSpec extends SparkSpec {
     assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSet === Set("1" -> "x", "2" -> "y"))
   }
 
-  test("ZipSource reads entries from zip archives via binaryFile") {
+  test("graft-xml reads the XML entries of a zip archive and ignores the rest") {
     val dir = Files.createTempDirectory("graftzip").toFile
     val f = new File(dir, "a.zip")
     val zout = new ZipOutputStream(new FileOutputStream(f))
+    zout.putNextEntry(new ZipEntry("inner.xml"))
+    zout.write(XmlRecordSource.renderXml("r", Iterator(Seq("k" -> "1", "v" -> "hello zip"))).getBytes)
+    zout.closeEntry()
     zout.putNextEntry(new ZipEntry("inner.txt"))
     zout.write("hello zip".getBytes)
     zout.closeEntry(); zout.close()
-    val entries = ZipSource.entries(spark, dir.getAbsolutePath)
-    val got = entries.select("entry", "content").collect()
-      .map(r => (r.getString(0), new String(r.getAs[Array[Byte]](1)))).toSet
-    assert(got === Set(("inner.txt", "hello zip")))
+    val got = spark.read.format("graft-xml").option("recordTag", "r").load(dir.getAbsolutePath)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(got === Set(("1", "hello zip")))
   }
 
   test("PartitionedWriter writes per-partition dirs and honors skip-if-exists") {

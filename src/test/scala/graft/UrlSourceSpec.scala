@@ -6,11 +6,11 @@ import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.sources.{UrlSource, ZipSource}
+import graft.sources.{UrlSource, XmlRecordSource}
 
 /** Drives the web→lake fetch end to end against a LOCAL http fixture
   * (no egress): fetch a zip from the fixture server, land it in a lake
-  * dir, and read it back through the same ZipSource path the ingest
+  * dir, and read it back through the same `graft-xml` source the ingest
   * pipeline uses — the literal flow of the reference's
   * ingest_web_to_gcs.py, minus the remote host. */
 class UrlSourceSpec extends SparkSpec {
@@ -36,8 +36,10 @@ class UrlSourceSpec extends SparkSpec {
     finally server.stop(0)
   }
 
-  test("fetched archive lands atomically and round-trips through ZipSource") {
-    val payload = zipBytes("ratings.xml" -> "<l><p id=\"1\"/></l>", "note.txt" -> "hi")
+  test("fetched archive lands atomically and round-trips through graft-xml") {
+    val payload = zipBytes(
+      "ratings.xml" -> XmlRecordSource.renderXml("p", Iterator(Seq("id" -> "1"), Seq("id" -> "2"))),
+      "note.txt" -> "hi")
     withServer { ex =>
       ex.sendResponseHeaders(200, payload.length)
       ex.getResponseBody.write(payload)
@@ -53,10 +55,10 @@ class UrlSourceSpec extends SparkSpec {
       assert(names.filterNot(_.endsWith(".crc")) === Set("standard_jan24frl_xml.zip"),
         s"lake contents: $names")
       assert(!names.exists(_.contains(".inprogress")), s"partial fetch visible: $names")
-      val entries = ZipSource.entries(spark, dest)
-        .select("entry", "content").as[(String, Array[Byte])].collect()
-        .map { case (e, c) => e -> new String(c, "UTF-8") }.toMap
-      assert(entries === Map("ratings.xml" -> "<l><p id=\"1\"/></l>", "note.txt" -> "hi"))
+      // The XML entry's records, and nothing of the text entry.
+      val ids = spark.read.format("graft-xml").option("recordTag", "p").load(dest)
+        .as[String].collect().sorted
+      assert(ids.toSeq === Seq("1", "2"))
     }
   }
 

@@ -55,6 +55,15 @@ class VersionedTableSpec extends SparkSpec {
     assert(builds === 1)
   }
 
+  test("a second read of one version runs no job") {
+    val root = java.nio.file.Files.createTempDirectory("graft_vt_reread").toString + "/t"
+    VersionedTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), root)
+    VersionedTable.read(spark, root, Some(0L))
+    assert(jobsOf(VersionedTable.read(spark, root, Some(0L))) === 0)
+    assert(VersionedTable.read(spark, root, Some(0L)).as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b")))
+  }
+
   test("readAll unions every version in one partition-discovered scan; upTo pins a snapshot") {
     val root = java.nio.file.Files.createTempDirectory("graft_vt_ra").toString + "/table"
     val a = Seq((1L, 10L), (2L, 20L))

@@ -1,7 +1,8 @@
 package graft
 
-import java.io.File
+import java.io.{File, FileOutputStream}
 import java.nio.file.Files
+import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.spark.sql.functions._
 import graft.sources.XmlRecordSource
@@ -59,6 +60,31 @@ class XmlDataSourceSpec extends SparkSpec {
     assert(base.where(col("country").isNotNull).count() === 3)
     // unsupported predicates (e.g. startsWith) still work via residual evaluation
     assert(base.where(col("name").startsWith("Al")).count() === 1)
+  }
+
+  test("DSv2 graft-xml: a zip yields its .xml entries only; each archive is a partition") {
+    val dir = Files.createTempDirectory("xmlds5").toFile
+    def writeZip(name: String, entries: (String, Option[String])*): Unit = {
+      val z = new ZipOutputStream(new FileOutputStream(new File(dir, name)))
+      entries.foreach { case (entry, body) =>
+        z.putNextEntry(new ZipEntry(entry))
+        body.foreach(b => z.write(b.getBytes("UTF-8")))
+        z.closeEntry()
+      }
+      z.close()
+    }
+    def players(ids: String*): Option[String] =
+      Some(XmlRecordSource.renderXml("player", ids.iterator.map(id => Seq("fideid" -> id))))
+    // A directory entry, a non-XML entry and a directory named like XML
+    // are skipped; a non-XML body would fail the parse if it were read.
+    writeZip("a.zip", "sub/" -> None, "sub/a.xml" -> players("1", "2"),
+      "notes.txt" -> Some("not xml <"), "odd.xml/" -> None)
+    writeZip("b.zip", "b.xml" -> players("3"))
+    val df = spark.read.format("graft-xml").option("recordTag", "player")
+      .load(dir.getAbsolutePath + "/*.zip")
+    assert(df.columns.toSeq === Seq("fideid"))
+    assert(df.collect().map(_.getString(0)).sorted.toSeq === Seq("1", "2", "3"))
+    assert(df.rdd.getNumPartitions === 2)
   }
 
   test("DSv2 graft-xml: a filesystem set only on the session lists, infers and reads") {
